@@ -25,6 +25,7 @@ from collections import OrderedDict
 from pyspark.sql import functions as F
 
 from fermor_spark.graph import PropertyGraph
+from fermor_spark.session import local_frame
 
 MAX_COLLECT_EDGES = 1_000_000
 
@@ -360,7 +361,7 @@ def strongly_connected_subgraphs(
             (u, v) for u in comp for v in succ.get(u, []) if v in comp
         ]
         if edges:
-            rows = g.spark.createDataFrame(edges, "src string, dst string")
+            rows = local_frame(g.spark, edges, "src string, dst string")
             new = PropertyGraph(
                 g.spark, new.V,
                 new.E.select(*new.E.columns).unionByName(

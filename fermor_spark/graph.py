@@ -35,6 +35,8 @@ import pandas  # noqa: F401  (resolves stringified pandas_udf type hints)
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from fermor_spark.session import local_frame
+
 V_FIELDS = ["id", "kind", "doc"]
 E_FIELDS = ["label", "src", "dst", "weight", "doc"]
 # conflict resolution orders by (_batch, _seq): _batch is the driver-side
@@ -79,9 +81,9 @@ class PropertyGraph:
         materialized_vertices: bool = False,
     ):
         self.spark = spark
-        self.V = vertices if vertices is not None else spark.createDataFrame([], V_SCHEMA)
+        self.V = vertices if vertices is not None else local_frame(spark, [], V_SCHEMA)
         if edges is None:
-            edges = spark.createDataFrame([], E_BUILD_SCHEMA if not forked else E_BUILD_SCHEMA)
+            edges = local_frame(spark, [], E_BUILD_SCHEMA)
         self.E = edges
         self.edge_builders = dict(edge_builders or {})
         self.is_forked = forked
@@ -172,7 +174,7 @@ class PropertyGraph:
                     else:
                         doc = _doc_json(t[2])
                 rows.append((label, src, dst, weight, doc, batch, i))
-            df = self.spark.createDataFrame(rows, E_BUILD_SCHEMA)
+            df = local_frame(self.spark, rows, E_BUILD_SCHEMA)
 
         new_e = self._lift_edges_for_build().unionByName(df)
         g = PropertyGraph(
@@ -246,7 +248,7 @@ class PropertyGraph:
                 else:
                     vid, doc, kind = str(p), None, None
                 rows.append((vid, kind, doc, batch, i))
-            df = self.spark.createDataFrame(rows, V_BUILD_SCHEMA)
+            df = local_frame(self.spark, rows, V_BUILD_SCHEMA)
         old_v = self.V
         if "_batch" not in old_v.columns:
             old_v = old_v.withColumn("_batch", F.lit(0)).withColumn(
@@ -300,13 +302,17 @@ class PropertyGraph:
 
         parts = []
         default_part = e.where(~F.col("label").isin(list(special)) if special else F.lit(True))
-        # unique (last wins) — the default for unconfigured labels too
-        w = Window.partitionBy("label", "src", "dst").orderBy(
-            F.col("_batch").desc(), F.col("_seq").desc()
-        )
+        # unique (last wins) — the default for unconfigured labels too.
+        # Only keys some batch touched collapse: rows that all sit in batch
+        # 0 (loaded as-is, e.g. the parallel rows of a from_dataframes
+        # table) pass through unchanged. Both windows share one
+        # partitioning and sort, so the key max adds no exchange.
+        key = Window.partitionBy("label", "src", "dst")
+        w = key.orderBy(F.col("_batch").desc(), F.col("_seq").desc())
         parts.append(
             default_part.withColumn("_rn", F.row_number().over(w))
-            .where(F.col("_rn") == 1)
+            .withColumn("_max_batch", F.max("_batch").over(key))
+            .where((F.col("_rn") == 1) | (F.col("_max_batch") == 0))
             .select(*E_FIELDS)
         )
         weighted = by_builder.get(WEIGHTED, [])
@@ -502,7 +508,7 @@ class PropertyGraph:
         """Point lookup, no existence check (reference: src/fermor/graph.clj:258-260)."""
         from fermor_spark.route import Route
 
-        return Route(self, self.spark.createDataFrame([(str(vid),)], "id string"), "v")
+        return Route(self, local_frame(self.spark, [(str(vid),)], "id string"), "v")
 
     def lookup(self, kind: str, raw_id) -> "Route":
         """KindId lookup — ids follow the 'kind:id' convention
@@ -513,7 +519,7 @@ class PropertyGraph:
         from fermor_spark.route import Route
 
         return Route(
-            self, self.spark.createDataFrame([(str(v),) for v in vids], "id string"), "v"
+            self, local_frame(self.spark, [(str(v),) for v in vids], "id string"), "v"
         )
 
     def get_edge(self, label: str, src, dst) -> DataFrame:
@@ -544,7 +550,7 @@ class PropertyGraph:
         g = self
         if v_pairs:
             rows = [(str(i), None, _doc_json(d)) for i, d in v_pairs]
-            updates = g.spark.createDataFrame(rows, V_SCHEMA)
+            updates = local_frame(g.spark, rows, V_SCHEMA)
             merged = (
                 g.V.select(*V_FIELDS).alias("old")
                 .join(updates.alias("new"), "id", "full")
@@ -570,8 +576,8 @@ class PropertyGraph:
         rows = [
             (str(l), str(s), str(d), _doc_json(doc)) for l, s, d, doc in quads
         ]
-        updates = self.spark.createDataFrame(
-            rows, "label string, src string, dst string, _newdoc string"
+        updates = local_frame(
+            self.spark, rows, "label string, src string, dst string, _newdoc string"
         )
         key = ["label", "src", "dst"]
         merged = (
@@ -638,7 +644,7 @@ class PropertyGraph:
 
     def remove_vertices(self, vids: Sequence) -> "PropertyGraph":
         """Remove vertices and their incident edges (left_anti joins)."""
-        rm = self.spark.createDataFrame([(str(v),) for v in vids], "id string")
+        rm = local_frame(self.spark, [(str(v),) for v in vids], "id string")
         new_v = self.V.join(rm, "id", "left_anti")
         new_e = (
             self.E.join(rm.withColumnRenamed("id", "src"), "src", "left_anti")
@@ -652,7 +658,7 @@ class PropertyGraph:
     def remove_documents(self, vids: Sequence) -> "PropertyGraph":
         """Null out vertex documents (reference: remove-documents,
         src/fermor/graph.clj:75-112)."""
-        rm = self.spark.createDataFrame([(str(v),) for v in vids], "rid string")
+        rm = local_frame(self.spark, [(str(v),) for v in vids], "rid string")
         new_v = self.V.join(rm, self.V["id"] == rm["rid"], "left").select(
             "id", "kind",
             F.when(F.col("rid").isNotNull(), F.lit(None).cast("string"))
@@ -748,8 +754,9 @@ class PropertyGraph:
                              materialized_vertices=merged.materialized_vertices)
 
     def remove_edges(self, triples: Iterable[Sequence]) -> "PropertyGraph":
-        rm = self.spark.createDataFrame(
-            [(str(l), str(s), str(d)) for l, s, d in triples], "label string, src string, dst string"
+        rm = local_frame(
+            self.spark, [(str(l), str(s), str(d)) for l, s, d in triples],
+            "label string, src string, dst string",
         )
         new_e = self.E.join(rm, ["label", "src", "dst"], "left_anti").select(*self.E.columns)
         return PropertyGraph(self.spark, self.V, new_e, self.edge_builders,
@@ -921,9 +928,9 @@ class PropertyGraph:
                 str(n), data.get("kind"),
                 _doc_json(data["doc"]) if "doc" in data else None,
             ))
-        e = spark.createDataFrame(
-            erows, "label string, src string, dst string, weight double, doc string")
-        vdf = spark.createDataFrame(vrows, V_SCHEMA) if vrows else None
+        e = local_frame(
+            spark, erows, "label string, src string, dst string, weight double, doc string")
+        vdf = local_frame(spark, vrows, V_SCHEMA) if vrows else None
         return cls.from_dataframes(spark, e, vdf)
 
     # -------------------------------------------------------------- equality

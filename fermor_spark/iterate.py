@@ -43,6 +43,7 @@ from pyspark.sql import functions as F
 from fermor_spark.graph import PropertyGraph
 from fermor_spark.hints import bounded_broadcast
 from fermor_spark.route import Route
+from fermor_spark.session import local_frame
 
 def _persist(df: DataFrame) -> DataFrame:
     """Eager localCheckpoint: materialize + truncate lineage (see module
@@ -677,7 +678,7 @@ def strongly_connected_components(
             # block is unchanged; intra-block duplication is bounded by
             # branching^(hops_per_round) exactly like the re-entries the
             # r10 note already accepts (k=4 keeps it small). Audit after:
-            # ~2 exchange-jobs per block, SCC gate 157 -> ~90 jobs.
+            # ~2 exchange-jobs per block, SCC gate 157 -> 143-146 jobs.
             for _ in range(hops_per_round):
                 step = (
                     step.join(adj, step["id"] == adj["u"], "inner")
@@ -734,7 +735,7 @@ def strongly_connected_components(
         # F.min pivot label and the SQL oracles' min()
         rows = [(v, min(c)) for c in comps for v in c]
         if rows:
-            settled.append(g.spark.createDataFrame(rows, "id string, component string"))
+            settled.append(local_frame(g.spark, rows, "id string, component string"))
         return True
 
     global LAST_SCC_ROUNDS
@@ -799,7 +800,7 @@ def strongly_connected_components(
     bwd.unpersist()
     trim_adj.unpersist()
     if not settled:
-        return g.spark.createDataFrame([], "id string, component string")
+        return local_frame(g.spark, [], "id string, component string")
     out = settled[0]
     for s in settled[1:]:
         out = out.unionByName(s)
@@ -1352,7 +1353,7 @@ def k_core(g: PropertyGraph, k: int, labels=None, max_iters: int = 500,
         LAST_KCORE_ROUNDS = 0  # no distributed rounds ran
         e.unpersist()
         rows = [(u, deg_l[u]) for u in nbrs if u not in removed]
-        return g.spark.createDataFrame(rows, "id string, deg long")
+        return local_frame(g.spark, rows, "id string, deg long")
 
     deg = _persist(
         e.groupBy("u").agg(F.count("*").alias("deg")).withColumnRenamed("u", "id"))

@@ -80,6 +80,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from fermor_spark.session import local_frame
+
 MEDIA_SCHEMA = T.StructType([
     T.StructField("media_id", T.LongType()),
     T.StructField("kind", T.StringType()),          # image | audio | video
@@ -116,7 +118,7 @@ FRAME_SCHEMA = T.StructType([
 
 def media_table(spark, rows) -> DataFrame:
     """Build a media DataFrame from (media_id, kind, content_bytes, meta)."""
-    return spark.createDataFrame(rows, MEDIA_SCHEMA)
+    return local_frame(spark, rows, MEDIA_SCHEMA)
 
 
 def repartition_for_payload(df: DataFrame, target_bytes: int = 128 * 1024 * 1024,

@@ -13,6 +13,8 @@ import struct
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from fermor_spark.session import local_frame
+
 
 def _floor_half_up(a):
     """floor with HALF-UP ties on a non-negative array, WITHOUT the
@@ -374,8 +376,8 @@ def ivf_topk(
                  ivf_fit_centroids(df, id_col, vec_col, n_centroids, iters, seed),
                  dtype=np.float64)
     if C.size == 0:   # empty corpus -> no centroids -> empty result
-        return spark.createDataFrame(
-            [], "query_id long, neighbor_id long, rank long, cosine double")
+        return local_frame(
+            spark, [], "query_id long, neighbor_id long, rank long, cosine double")
     bc = spark.sparkContext.broadcast(C)
 
     def cell_of(prefix_probe: int):
@@ -462,7 +464,7 @@ def semantic_assign(
     if centroid_ids is None:
         centroid_ids = list(range(len(centroids)))
     if not centroids:   # empty corpus -> no seed centroids -> empty result
-        return spark.createDataFrame([], "id long, cluster long")
+        return local_frame(spark, [], "id long, cluster long")
     C = np.asarray(centroids, dtype=np.float64)
     cids = np.asarray(centroid_ids)
     bc = spark.sparkContext.broadcast((cids, C))
@@ -594,8 +596,8 @@ def lsh_topk(
     first = (df.where(F.col(vec_col).isNotNull())
              .select(F.size(F.col(vec_col)).alias("d")).limit(1).collect())
     if not first:   # empty corpus -> empty result, stable schema
-        return df.sparkSession.createDataFrame(
-            [], "query_id long, neighbor_id long, rank long, cosine double")
+        return local_frame(
+            df.sparkSession, [], "query_id long, neighbor_id long, rank long, cosine double")
     dim = int(first[0]["d"])
 
     import numpy as np

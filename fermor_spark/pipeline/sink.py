@@ -185,11 +185,13 @@ def write_corpus_tar(
         os.replace(part, final)
         return pd.DataFrame({"shard": [b], "n": [len(pdf)]})
 
-    # Explicit spread over n_shards tasks: the bare groupBy's shuffle is
-    # AQE-coalesced toward one task at small byte sizes, serializing the
-    # tar encode (same fix as the WARC sink; the explicit repartition is
-    # exempt from coalescing and satisfies the groupBy's clustering, so
-    # no second exchange is added).
+    # Explicit repartition into n_shards tasks: the bare groupBy's shuffle
+    # is AQE-coalesced toward one task at small byte sizes, serializing
+    # the tar encode (same fix as the WARC sink; the explicit repartition
+    # is exempt from coalescing and satisfies the groupBy's clustering, so
+    # no second exchange is added). The shard values are hashed again into
+    # the n_shards tasks, so collisions leave about 1/e of them empty —
+    # not an n-way spread.
     sel.repartition(n_shards, "_b") \
         .groupBy("_b").applyInPandas(write_shard, "shard int, n long") \
         .collect()

@@ -266,7 +266,7 @@ def write_warc(df: DataFrame, path: str, url_col: str = "url",
         F.col(url_col).alias("url"), F.col(payload_col).alias("payload"),
         (F.abs(F.xxhash64(url_col)) % n_files).alias("_b"),
     ).where(F.col("url").isNotNull() & F.col("payload").isNotNull())
-    # Spread buckets over n_files tasks EXPLICITLY: the groupBy below
+    # Hand the buckets to n_files tasks explicitly: the groupBy below
     # hashes on _b into spark.sql.shuffle.partitions and AQE then
     # coalesces the (tiny-bytes, gzip-CPU-heavy) post-shuffle partitions
     # toward ONE task — the per-record gzip loop, the actual cost of the
@@ -274,6 +274,9 @@ def write_warc(df: DataFrame, path: str, url_col: str = "url",
     # explicit count is exempt from AQE coalescing, and its
     # HashPartitioning(_b, n_files) satisfies the groupBy's clustering
     # requirement, so no second exchange is added (guide §2.4/§2.5).
+    # This is not an n-way spread: the n_files bucket values are hashed
+    # again into n_files tasks, and the collisions leave about 1/e of the
+    # tasks with no bucket while others write two or more files.
     bucketed = bucketed.repartition(n_files, "_b")
     base_ext = "wet" if record_type == "conversion" else "warc"
     ext = f"{base_ext}.gz" if compress else base_ext

@@ -19,6 +19,7 @@ from pyspark.sql import functions as F
 
 from fermor_spark import iterate
 from fermor_spark.datasets import star_graph, table
+from fermor_spark.session import local_frame
 
 # --------------------------------------------------------------------------
 # registry plumbing
@@ -3046,7 +3047,7 @@ def algo_dominators_flow(spark: SparkSession, sf_dir: str) -> DataFrame:
         ("B", "A"), ("E", "H"), ("H", "E"), ("H", "K"), ("A", "D")]).forked()
     succ, pred = algo.collect_adjacency(g, "to")
     doms = algo.immediate_dominators(succ, pred, "S")
-    return spark.createDataFrame(sorted(doms.items()), "id string, idom string")
+    return local_frame(spark, sorted(doms.items()), "id string, idom string")
 
 
 @query(
@@ -4424,8 +4425,8 @@ def sketch_gk_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).collect()[0]
     if row["q"] is None:   # empty input: the contract holds vacuously,
         # and the oracle's VALUES table still emits one row per prob
-        return spark.createDataFrame([(p, 0, True) for p in probs],
-                                     "prob double, n_rows long, rank_ok boolean")
+        return local_frame(spark, [(p, 0, True) for p in probs],
+                           "prob double, n_rows long, rank_ok boolean")
     qs, n = list(row["q"]), int(row["n"])
     tol = n / acc + 1
     aggs = []
@@ -4438,7 +4439,7 @@ def sketch_gk_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
         lo, hi = int(r2[f"lt{i}"]) + 1, int(r2[f"le{i}"])
         ok = (lo <= p * n + tol) and (hi >= p * n - tol)
         out.append((p, n, ok))
-    return spark.createDataFrame(out, "prob double, n_rows long, rank_ok boolean")
+    return local_frame(spark, out, "prob double, n_rows long, rank_ok boolean")
 
 
 @query(
@@ -4889,7 +4890,7 @@ def pipeline_robots_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
             .otherwise(F.concat(F.lit("/public/"),
                                 F.col("doc_id").cast("string")))
         ).alias("url"))
-    robots = spark.createDataFrame([
+    robots = local_frame(spark, [
         ("ads.example.com", "User-agent: *\nDisallow: /"),
         ("www.news.example.org",
          "User-agent: *\nDisallow: /pr%69vate/\nAllow: /private/pr*"),
@@ -4949,7 +4950,7 @@ def pipeline_robots_forced_join(spark: SparkSession, sf_dir: str
             .otherwise(F.concat(F.lit("/public/"),
                                 F.col("doc_id").cast("string")))
         ).alias("url"))
-    real = spark.createDataFrame([
+    real = local_frame(spark, [
         ("ads.example.com", "User-agent: *\nDisallow: /"),
         ("www.news.example.org",
          "User-agent: *\nDisallow: /pr%69vate/\nAllow: /private/pr*"),
@@ -5267,8 +5268,8 @@ def pipeline_crawl_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
         domain_filter(url_host(uniq, "norm_url"), "host",
                       ["ads.example.com"]),
         "norm_url",
-        spark.createDataFrame(
-            [("news.example.org", "User-agent: *\nDisallow: /private/")],
+        local_frame(
+            spark, [("news.example.org", "User-agent: *\nDisallow: /private/")],
             "host string, robots_txt string"))
     docs = polite.where(F.col("kept") & F.col("robots_ok")).select(
         F.element_at(F.split("norm_url", "/"), -1).cast("long")

@@ -6,9 +6,11 @@ unchanged — only master/memory/shuffle-partition settings differ.
 
 from __future__ import annotations
 
+import functools
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 
 def get_spark(
@@ -34,7 +36,8 @@ def get_spark(
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.driver.memory", os.environ.get("FERMOR_DRIVER_MEMORY", "48g"))
+        .config("spark.driver.memory",
+                os.environ.get("FERMOR_DRIVER_MEMORY") or _default_driver_memory())
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         # keep metastore/warehouse artifacts out of the repo working dir
@@ -44,6 +47,49 @@ def get_spark(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def _default_driver_memory() -> str:
+    """min(48g, half of physical RAM): a fixed 48g heap gets the JVM
+    OOM-killed on a 15 GB host, while a host with 96 GB or more keeps 48g."""
+    ram_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 2**20
+    return f"{min(48 * 1024, ram_mb // 2)}m"
+
+
+@functools.lru_cache(maxsize=64)
+def _schemas(schema: str | StructType):
+    """(Spark struct, Arrow schema) for a DDL string or a struct; the DDL
+    parse is a JVM round trip, and point reads repeat a few schemas."""
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import _parse_datatype_string
+
+    struct = schema if isinstance(schema, StructType) else _parse_datatype_string(schema)
+    return struct, to_arrow_schema(struct)
+
+
+def local_frame(spark: SparkSession, rows, schema: str | StructType) -> DataFrame:
+    """A frame of driver-side Python rows (tuples in ``schema`` order),
+    planned as a JVM ``LocalRelation``.
+
+    ``spark.createDataFrame(list, ddl)`` plans a pickled ``LogicalRDD``
+    instead: Catalyst has no statistics for it, and every action that
+    reads it starts Python worker tasks to unpickle the rows — on a
+    one-hop point read that was most of the read's CPU. Here the rows go
+    to the JVM once, as an Arrow table typed from ``schema``. pandas is
+    skipped on purpose: a pandas round trip turns a NaN double into null,
+    while Arrow keeps NaN and None distinct, like the list path did."""
+    import pyarrow as pa
+
+    struct, arrow = _schemas(schema)
+    rows = list(rows)
+    width = len(arrow)
+    bad = next((r for r in rows if len(r) != width), None)
+    if bad is not None:
+        raise ValueError(f"row {bad!r} does not have the {width} fields of {struct.simpleString()}")
+    cols = list(zip(*rows)) if rows else [()] * width
+    table = pa.Table.from_arrays(
+        [pa.array(c, type=f.type) for c, f in zip(cols, arrow)], schema=arrow)
+    return spark.createDataFrame(table, struct)
 
 
 # --------------------------------------------------------------------------

@@ -13,6 +13,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from fermor_spark.session import local_frame
+
 
 def approx_distinct(df: DataFrame, cols: list[str], rsd: float = 0.05) -> DataFrame:
     """Per-column HyperLogLog distinct estimates → one row of estimates."""
@@ -146,15 +148,15 @@ def heavy_hitters(df: DataFrame, col: str, min_share: float = 0.01,
     )
     cand_vals = [v for v in cand_vals if v is not None]
     if _has_cms_estimate(spark):
-        candidates = spark.createDataFrame([(v,) for v in cand_vals], "item string")
-        sk = spark.createDataFrame([(sketch,)], "cms binary")
+        candidates = local_frame(spark, [(v,) for v in cand_vals], "item string")
+        sk = local_frame(spark, [(sketch,)], "cms binary")
         probed = candidates.crossJoin(F.broadcast(sk)).select(
             "item",
             F.expr("count_min_sketch_estimate(cms, item)").alias("approx_count"),
         )
     else:
-        probed = spark.createDataFrame(
-            [(v, cms_estimate(sketch, v)) for v in cand_vals],
+        probed = local_frame(
+            spark, [(v, cms_estimate(sketch, v)) for v in cand_vals],
             "item string, approx_count long",
         )
     return probed.where(F.col("approx_count") >= min_share * total)

@@ -9,6 +9,7 @@ import json
 from pyspark.sql import functions as F
 
 from fermor_spark import PropertyGraph
+from fermor_spark.session import local_frame
 from tests.fixtures import edge_flavours_graph, edges_graph, job_graph
 
 
@@ -224,6 +225,22 @@ def test_add_edges_on_loaded_graph_keeps_existing(spark):
     g3 = g.add_edges("l", [("a", "b", {"v": 2})]).forked()
     docs = {(r["src"], r["dst"]): r["doc"] for r in g3._edges_df("l").collect()}
     assert json.loads(docs[("a", "b")]) == {"v": 2}
+
+
+def test_forked_passes_untouched_parallel_rows(spark):
+    """forked()'s unique builder collapses only keys that some batch
+    touched: two identical loaded rows under a label no write touched
+    survive an add_edges on another label, while a write to the same key
+    still collapses it to the last row."""
+    e = local_frame(spark, [("l2", "a", "b"), ("l2", "a", "b"), ("l1", "x", "y")],
+                    "label string, src string, dst string")
+    g = PropertyGraph.from_dataframes(spark, e)
+    g2 = g.add_edges("l1", [("x", "z")]).forked()
+    assert sorted(g2._edges_df("l2").select("src", "dst").collect()) == [("a", "b")] * 2
+    assert set(g2.edges("l1").edge_tuples()) == {("l1", "x", "y"), ("l1", "x", "z")}
+    g3 = g.add_edges("l2", [("a", "b", {"v": 1})]).forked()
+    rows = g3._edges_df("l2").collect()
+    assert len(rows) == 1 and json.loads(rows[0]["doc"]) == {"v": 1}
 
 
 def test_null_endpoint_edges_dropped(spark):

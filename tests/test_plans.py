@@ -158,6 +158,79 @@ def test_ensure_parallelism_semantics(spark):
     assert ensure_parallelism(wide) is wide
 
 
+def test_local_frame_round_trip(spark):
+    """local_frame keeps what the list path kept: None and NaN doubles
+    stay distinct, unicode and binary values and full-width bigints
+    survive, and zero rows give the same schema."""
+    import math
+
+    from fermor_spark.session import local_frame
+
+    ddl = "s string, x double, b binary, n bigint"
+    rows = [("é中\U0001f600", float("nan"), b"\x00\xff", 2 ** 63 - 1),
+            (None, None, None, None),
+            ("", -0.5, b"", -(2 ** 63))]
+    df = local_frame(spark, rows, ddl)
+    got = df.collect()
+    assert math.isnan(got[0]["x"]) and got[1]["x"] is None
+    assert [tuple(r) for r in got[1:]] == rows[1:]
+    assert (got[0]["s"], bytes(got[0]["b"]), got[0]["n"]) == rows[0][:1] + rows[0][2:]
+    assert df.where("x IS NULL").count() == 1 and df.where("isnan(x)").count() == 1
+    empty = local_frame(spark, [], ddl)
+    assert empty.schema == df.schema and empty.count() == 0
+    assert empty.schema.simpleString() == "struct<s:string,x:double,b:binary,n:bigint>"
+    with pytest.raises(ValueError):
+        local_frame(spark, [("a",)], ddl)
+
+
+def _leaf_names(df) -> list:
+    leaves = df._jdf.queryExecution().optimizedPlan().collectLeaves()
+    return [leaves.apply(i).nodeName() for i in range(leaves.size())]
+
+
+def test_graph_driver_rows_plan_as_local_relation(spark):
+    """Every PropertyGraph entry point that takes driver-side rows plans
+    them as a LocalRelation — a LogicalRDD leaf there means a pickled
+    Python RDD with no statistics, which starts Python workers on each
+    action that reads it."""
+    import networkx as nx
+
+    from fermor_spark import PropertyGraph
+
+    # an earlier test's cached frame with the same (empty) rows would stand
+    # in for the LocalRelation as an InMemoryRelation leaf
+    spark.catalog.clearCache()
+    built = PropertyGraph.build(spark)
+    # parquet-backed V and E, so no join or union below folds away as
+    # an empty relation and hides the driver-row leaf
+    nation = spark.read.parquet(f"{SF}/nation.parquet")
+    loaded = PropertyGraph.from_dataframes(
+        spark,
+        nation.selectExpr("'l' AS label", "CAST(n_nationkey AS STRING) AS src",
+                          "CAST(n_regionkey AS STRING) AS dst"),
+        vertices=nation.selectExpr("CAST(n_nationkey AS STRING) AS id"))
+    G = nx.DiGraph()
+    G.add_edge("a", "b", weight=1.0)
+    cases = {
+        "__init__.V": built.V,
+        "__init__.E": built.E,
+        "add_edges": loaded.add_edges("l", [("1", "9")]).E,
+        "add_vertices": loaded.add_vertices([("1", {"d": 1})]).V,
+        "get_vertex": loaded.get_vertex("1").df,
+        "get_vertices": loaded.get_vertices(["1", "2"]).df,
+        "set_documents": loaded.set_documents([("1", {"d": 1})]).V,
+        "set_edge_documents": loaded.set_edge_documents([("l", "1", "1", {"d": 1})]).E,
+        "remove_vertices": loaded.remove_vertices(["1"]).E,
+        "remove_documents": loaded.remove_documents(["1"]).V,
+        "remove_edges": loaded.remove_edges([("l", "1", "1")]).E,
+        "from_networkx": PropertyGraph.from_networkx(spark, G).E,
+    }
+    for name, df in cases.items():
+        leaves = _leaf_names(df)
+        assert "LogicalRDD" not in leaves, (name, leaves)
+        assert "LocalRelation" in leaves, (name, leaves)
+
+
 def test_id_tokens_repartition_gated_by_size(spark, monkeypatch, tmp_path):
     """_id_tokens only adds its keyed repartition when the source is BOTH
     under-parallel AND large enough to amortize the exchange — unconditional,

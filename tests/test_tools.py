@@ -350,3 +350,82 @@ def test_broadcast_sites_match_adjudicated_allowlist():
         "unadjudicated F.broadcast site(s): "
         f"{dict(sites.items() - allow.items())} / removed: "
         f"{dict(allow.items() - sites.items())}")
+
+
+def _list_create_dataframe_hits(source: str) -> list:
+    """Lines of ``createDataFrame(...)`` calls whose first argument is a
+    list or tuple display or comprehension, or a name that the enclosing
+    function (or the module) binds to one. ``local_frame`` is exempt: it
+    is the one place driver rows become a frame."""
+    import ast
+
+    funcs = (ast.FunctionDef, ast.AsyncFunctionDef)
+
+    def is_display(node) -> bool:
+        return isinstance(node, (ast.List, ast.Tuple, ast.ListComp, ast.GeneratorExp))
+
+    def own_nodes(scope):
+        # the scope's nodes, nested function bodies left to their own visit
+        todo = list(ast.iter_child_nodes(scope))
+        while todo:
+            n = todo.pop()
+            yield n
+            if not isinstance(n, funcs):
+                todo.extend(ast.iter_child_nodes(n))
+
+    hits = set()
+
+    def visit(scope, outer: set):
+        if getattr(scope, "name", None) == "local_frame":
+            return
+        nodes = list(own_nodes(scope))
+        bound = set(outer)
+        for n in nodes:
+            if isinstance(n, ast.Assign) and is_display(n.value):
+                bound |= {t.id for t in n.targets if isinstance(t, ast.Name)}
+            elif (isinstance(n, ast.AnnAssign) and n.value is not None
+                  and is_display(n.value) and isinstance(n.target, ast.Name)):
+                bound.add(n.target.id)
+        for n in nodes:
+            if (isinstance(n, ast.Call) and isinstance(n.func, ast.Attribute)
+                    and n.func.attr == "createDataFrame" and n.args):
+                arg = n.args[0]
+                if is_display(arg) or (isinstance(arg, ast.Name) and arg.id in bound):
+                    hits.add(n.lineno)
+            elif isinstance(n, funcs):
+                visit(n, bound)
+
+    visit(ast.parse(source), set())
+    return sorted(hits)
+
+
+def test_list_create_dataframe_detector():
+    src = (
+        "def f(spark, xs):\n"
+        "    rows = []\n"
+        "    spark.createDataFrame(rows, 'a int')\n"
+        "    spark.createDataFrame([(1,)], 'a int')\n"
+        "    spark.createDataFrame([(x,) for x in xs], 'a int')\n"
+        "    spark.createDataFrame(pdf, 'a int')\n"
+        "def local_frame(spark, rows, ddl):\n"
+        "    rows = list(rows)\n"
+        "    return spark.createDataFrame([], ddl)\n"
+    )
+    assert _list_create_dataframe_hits(src) == [3, 4, 5]
+
+
+def test_no_python_list_create_dataframe():
+    """Driver-side rows go through session.local_frame, which plans them
+    as a JVM LocalRelation. createDataFrame(<python list>) plans a pickled
+    LogicalRDD instead: no statistics for Catalyst, and Python worker
+    tasks on every action that reads it."""
+    root = os.path.join(REPO, "fermor_spark")
+    found = []
+    for dirpath, _, files in os.walk(root):
+        for fn in sorted(files):
+            if fn.endswith(".py"):
+                path = os.path.join(dirpath, fn)
+                with open(path) as f:
+                    found += [f"{os.path.relpath(path, REPO)}:{ln}"
+                              for ln in _list_create_dataframe_hits(f.read())]
+    assert not found, "use session.local_frame for driver rows: " + ", ".join(found)

@@ -532,7 +532,8 @@ def main() -> None:
     sf_val = float(sf) if sf.replace(".", "").isdigit() else sf
     total = round(sum(timings.values()), 2)
     # iteration round counts for the driver-loop operators, so a
-    # round-count regression is visible in the bench record without rerun
+    # round-count regression is visible in the bench record without rerun;
+    # the detail record also keeps each op's per-round probe values
     from fermor_spark import iterate as it
     rounds = {"cc": it.LAST_CC_ROUNDS, "kcore": it.LAST_KCORE_ROUNDS,
               "scc": it.LAST_SCC_ROUNDS, "bf": it.LAST_BF_ROUNDS,
@@ -544,7 +545,7 @@ def main() -> None:
     detail = {
         "metric": "headline_queries_total", "value": total, "unit": "sec",
         "sf": sf_val, "rounds": rounds, "queries": timings,
-        "runs": all_runs, "key_map": keymap, "sched_floor": sched_floor,
+        "round_rows": it.round_rows(), "runs": all_runs, "key_map": keymap, "sched_floor": sched_floor,
         "sched_floors": sched_floors, "disk_mbps": disk_mbps,
     }
     detail_path = os.path.join(os.path.dirname(os.path.abspath(__file__)),

@@ -2,13 +2,12 @@
 traversal (`descend`/`all` family, reference: src/fermor/core.clj:978-1249,
 src/fermor/descend.clj) and of the component-style algorithms.
 
-The reference's stack-safe CPS trampoline collapses, on Spark, into a
-driver-side loop over frontier DataFrames:
+The reference's stack-safe CPS trampoline collapses, on Spark, into one
+driver-side round loop, `_fixpoint`, that every operator here runs on:
 
-    while frontier nonempty:
-        next = step(frontier)   # one join
-        emit / cut per control
-        checkpoint every k iterations
+    for state, probe in _fixpoint(rec, state, step, max_rounds, probe):
+        if <fixed point or empty frontier>: break
+        emit / collect
 
 Key semantic deltas (documented; the reference's own tests multiset-compare):
 - emission is breadth-first/unordered, not DFS-ordered;
@@ -20,24 +19,39 @@ Cycle handling follows the reference's split (reference: `all` vs
 vs global-visited (fast, valid for reachability).
 
 Scale notes:
-- EVERY iteration `localCheckpoint(eager=True)`s its frontier/state and
-  unpersists the superseded frame. Cache-chained iterations look cheaper but
-  Catalyst re-analyzes the ever-deeper plan each round (superlinear driver
-  time: measured 15-40x slowdown by iteration ~6 at sf0.1) and leaked caches
-  degrade the whole session. Flat lineage keeps analysis O(1) per round;
-  unpersisting a superseded checkpoint is safe because its successor is
-  already materialized.
+- EVERY round `localCheckpoint(eager=False)`s its new state, and ONE
+  aggregate job both materializes the checkpoint and returns the round's
+  termination probe (a row count unless the operator fuses its own
+  columns into the same aggregate). Cache-chained iterations look cheaper
+  but Catalyst re-analyzes the ever-deeper plan each round (superlinear
+  driver time: measured 15-40x slowdown by iteration ~6 at sf0.1) and
+  leaked caches degrade the whole session; flat lineage keeps analysis
+  O(1) per round. An eager checkpoint followed by a separate probe is one
+  job more per round for the same answer.
+- superseded checkpoints are NOT unpersisted: `DataFrame.unpersist`
+  only uncaches CacheManager-registered plans, and a localCheckpoint is
+  not one, so the call does nothing. Their blocks are reaped by the
+  ContextCleaner once the frame is garbage-collected (bench.py's
+  per-query drain forces that promptly).
 - each hop is one shuffle join; frontiers are usually small → AQE broadcasts.
 - per-path expansion is exponential on dense graphs by nature; prefer the
   global-visited reachability entry points where paths aren't needed.
+
+Round telemetry: `round_rows(op)` is the per-round probe record of the
+calling context's most recent `op` call (each thread has its own), and
+`LAST_<OP>_ROUNDS` (module `__getattr__`) is its length — 0 when the
+driver-side finish ran instead of distributed rounds.
 """
 
 from __future__ import annotations
 
+import itertools
 from concurrent.futures import ThreadPoolExecutor
-from typing import Callable
+from contextvars import ContextVar
+from functools import reduce
+from typing import Callable, Iterator
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame, Row, Window
 from pyspark.sql import functions as F
 
 from fermor_spark.graph import PropertyGraph
@@ -45,9 +59,104 @@ from fermor_spark.hints import bounded_broadcast
 from fermor_spark.route import Route
 from fermor_spark.session import local_frame
 
+# op name -> that op's round record, per context (see _record)
+_ROUNDS: ContextVar[dict] = ContextVar("fermor_round_rows")
+
+_LAST_ROUNDS = {"LAST_BFS_ROUNDS": "bfs", "LAST_CC_ROUNDS": "cc",
+                "LAST_SCC_ROUNDS": "scc", "LAST_BF_ROUNDS": "bf",
+                "LAST_KCORE_ROUNDS": "kcore"}
+
+
+def __getattr__(name: str):
+    # PEP 562: LAST_<OP>_ROUNDS read the calling context's record
+    if name in _LAST_ROUNDS:
+        return len(round_rows(_LAST_ROUNDS[name]))
+    raise AttributeError(f"module {__name__!r} has no attribute {name!r}")
+
+
+def _record(op: str) -> list:
+    """Start ``op``'s round record for one call. The store is a
+    ContextVar and every call sets a fresh dict, so no thread (or copied
+    context) sees the rounds of another's later calls."""
+    rec: list = []
+    _ROUNDS.set({**_ROUNDS.get({}), op: rec})
+    return rec
+
+
+def round_rows(op: str | None = None):
+    """Per-round probe values of the calling context's most recent ``op``
+    call (empty when its driver-side finish did all the work); with no
+    ``op``, a dict of every op's."""
+    if op is None:
+        return {k: list(v) for k, v in _ROUNDS.get({}).items()}
+    return list(_ROUNDS.get({}).get(op, ()))
+
+
+def _fixpoint(rec: list, state: DataFrame,
+              step: Callable[[DataFrame, int], DataFrame],
+              max_rounds: int | None = None,
+              probe=None) -> Iterator[tuple[DataFrame, Row]]:
+    """The round driver. Yields ``(state, probe_row)`` once per round;
+    the caller tests its fixed point on the probe and breaks out.
+
+    Round ``i``: ``step(state, i)`` builds the next state lazily, the
+    driver lazily localCheckpoints it, and one aggregate job — ``probe``
+    columns, a row count by default — materializes the checkpoint and
+    returns the probe row. Its value is appended to ``rec``. At most
+    ``max_rounds`` rounds run (None: unbounded)."""
+    cols = probe or (F.count(F.lit(1)),)
+    for i in itertools.count() if max_rounds is None else range(max_rounds):
+        state = step(state, i).localCheckpoint(eager=False)
+        row = state.agg(*cols).first()
+        rec.append(row[0] if len(row) == 1 else tuple(row))
+        yield state, row
+
+
+def _driver_scale(df: DataFrame, limit: int):
+    """``df`` as pandas if it has at most ``limit`` rows, else None (also
+    for ``limit`` <= 0, the force-distributed setting). Probe and fetch
+    are ONE job: ``limit(limit + 1).toPandas()`` stops reading past the
+    bound, and an expensive upstream plan runs once instead of once for a
+    count and again for the fetch."""
+    if limit <= 0:
+        return None
+    pdf = df.limit(limit + 1).toPandas()
+    return pdf if len(pdf) <= limit else None
+
+
+def _min_label_components(a, b) -> dict:
+    """Union-find over the pairs ``zip(a, b)``, each union toward the
+    smaller id: maps every id that is not its component's minimum to that
+    minimum (ids absent from the map label themselves). Spark string
+    comparison is UTF-8 byte order = Python code-point order, so the
+    labels agree with Spark's min()."""
+    par: dict = {}
+
+    def find(x):
+        r = x
+        while par.get(r, r) != r:
+            r = par[r]
+        while par.get(x, x) != r:
+            par[x], x = r, par[x]
+        return r
+
+    for x, y in zip(a, b):
+        x, y = find(x), find(y)
+        if x != y:
+            if y < x:
+                x, y = y, x
+            par[y] = x
+    return {k: find(k) for k in par}
+
+
+def _union(frames, **kw) -> DataFrame:
+    return reduce(lambda a, b: a.unionByName(b, **kw), frames)
+
+
 def _persist(df: DataFrame) -> DataFrame:
-    """Eager localCheckpoint: materialize + truncate lineage (see module
-    docstring — per-iteration, not periodic)."""
+    """Eager localCheckpoint for state built ONCE per call and read by
+    every round (adjacency, degree tables): materialize + truncate lineage
+    before the loop starts."""
     return df.localCheckpoint(eager=True)
 
 
@@ -63,24 +172,22 @@ def _step_edges(g: PropertyGraph, labels, direction: str) -> DataFrame:
     return out_pairs.unionByName(in_pairs)
 
 
-def _loop_adjacency(g: PropertyGraph, labels, direction: str,
-                    cols=("u", "v")) -> DataFrame:
+def _loop_adjacency(g: PropertyGraph, labels, direction: str) -> DataFrame:
     """Adjacency frame materialized ONCE for an iterative loop.
 
     Every loop iteration joins the frontier against the adjacency; leaving
     it as a lazy derivation re-runs the label filter + direction union per
-    round, and at cluster scale an unpersisted big side re-shuffles every
-    round. Checkpointing it keyed-side once means each iteration pays only
-    the (small) frontier's work. Callers MUST unpersist it when the loop
-    ends."""
-    return _persist(_step_edges(g, labels, direction).select(*cols))
+    round, and at cluster scale an unmaterialized big side re-shuffles
+    every round. Checkpointing it keyed-side once means each iteration
+    pays only the (small) frontier's work."""
+    return _persist(_step_edges(g, labels, direction).select("u", "v"))
+
+
+def _path_step(col: str) -> F.Column:
+    return F.concat(F.col("path"), F.array(F.concat(F.lit("v:"), F.col(col))))
 
 
 # --------------------------------------------------------------- reachability
-
-# distributed BFS level rounds of the most recent all_reachable call —
-# last-call-wins telemetry; 0 = the driver-local BFS finish ran instead
-LAST_BFS_ROUNDS = 0
 
 
 def all_reachable(
@@ -102,74 +209,65 @@ def all_reachable(
     ``local_edge_threshold``, a driver-side level-order BFS replaces the
     per-level join+anti-join+checkpoint rounds — BFS is O(diameter)
     barrier rounds distributed, pure overhead on a driver-scale subgraph.
-    Pass 0 to force the distributed path (tests cover both)."""
-    global LAST_BFS_ROUNDS
-    LAST_BFS_ROUNDS = 0
+    Pass 0 to force the distributed path (tests cover both). Distributed,
+    ``LAST_BFS_ROUNDS`` counts every level round run, including a final
+    one that found nothing new."""
+    rec = _record("bfs")
     start_df = start.df if isinstance(start, Route) else start
-    adj = _loop_adjacency(g, labels, direction)
-    if local_edge_threshold and adj.count() <= local_edge_threshold:
-        starts = [r["id"] for r in start_df.select("id").distinct()
-                  .limit(local_edge_threshold + 1).collect()]
-        if len(starts) <= local_edge_threshold:
-            # Arrow both ways: a row-at-a-time collect/createDataFrame
-            # round trip costs more than the saved shuffle rounds at
-            # ~200k rows (measured) — toPandas/pandas in, pandas out
-            from collections import defaultdict
-
-            import numpy as np
-            import pandas as pd
-
-            apdf = adj.toPandas()
-            nb = defaultdict(list)
-            for u, v in zip(apdf["u"].to_numpy(), apdf["v"].to_numpy()):
-                nb[u].append(v)
-            depth_map = {s: 0 for s in starts}
-            frontier_l, d = starts, 0
-            while frontier_l and (max_depth is None or d < max_depth):
-                nxt = []
-                for u in frontier_l:
-                    for v in nb.get(u, ()):
-                        if v not in depth_map:
-                            depth_map[v] = d + 1
-                            nxt.append(v)
-                frontier_l, d = nxt, d + 1
-            adj.unpersist()
-            ids = [k for k, dd in depth_map.items() if include_start or dd > 0]
-            out = pd.DataFrame({
-                "id": pd.array(ids, dtype="string"),
-                "depth": np.fromiter(
-                    (depth_map[k] for k in ids), dtype=np.int32, count=len(ids)),
-            })
-            return g.spark.createDataFrame(out, "id string, depth int")
     frontier = start_df.select("id").distinct().withColumn("depth", F.lit(0))
+    adj = _loop_adjacency(g, labels, direction)
+    apdf = _driver_scale(adj, local_edge_threshold)
+    spdf = None if apdf is None else _driver_scale(
+        start_df.select("id").distinct(), local_edge_threshold)
+    if spdf is not None:
+        # Arrow both ways: a row-at-a-time collect/createDataFrame
+        # round trip costs more than the saved shuffle rounds at
+        # ~200k rows (measured) — toPandas/pandas in, pandas out
+        from collections import defaultdict
+
+        import numpy as np
+        import pandas as pd
+
+        nb = defaultdict(list)
+        for u, v in zip(apdf["u"].to_numpy(), apdf["v"].to_numpy()):
+            nb[u].append(v)
+        starts = spdf["id"].tolist()
+        depth_map = {s: 0 for s in starts}
+        frontier_l, d = starts, 0
+        while frontier_l and (max_depth is None or d < max_depth):
+            nxt = []
+            for u in frontier_l:
+                for v in nb.get(u, ()):
+                    if v not in depth_map:
+                        depth_map[v] = d + 1
+                        nxt.append(v)
+            frontier_l, d = nxt, d + 1
+        ids = [k for k, dd in depth_map.items() if include_start or dd > 0]
+        out = pd.DataFrame({
+            "id": pd.array(ids, dtype="string"),
+            "depth": np.fromiter(
+                (depth_map[k] for k in ids), dtype=np.int32, count=len(ids)),
+        })
+        return g.spark.createDataFrame(out, "id string, depth int")
+    levels = [frontier]
     seen = frontier
-    results = [frontier] if include_start else []
-    depth = 0
-    while True:
-        if max_depth is not None and depth >= max_depth:
-            break
-        nxt = (
+
+    def expand(frontier: DataFrame, i: int) -> DataFrame:
+        return (
             frontier.join(adj, frontier["id"] == adj["u"], "inner")
             .select(F.col("v").alias("id"))
             .distinct()
             .join(seen.select("id"), "id", "left_anti")
-            .withColumn("depth", F.lit(depth + 1))
+            .withColumn("depth", F.lit(i + 1))
         )
-        nxt = _persist(nxt)
-        if nxt.limit(1).count() == 0:
+
+    for nxt, (n,) in _fixpoint(rec, frontier, expand, max_depth):
+        if n == 0:
             break
-        results.append(nxt)
+        levels.append(nxt)
         seen = seen.unionByName(nxt)  # union of checkpointed levels
-        frontier = nxt
-        depth += 1
-        LAST_BFS_ROUNDS = depth
-    adj.unpersist()
-    if not results:
-        return start_df.select("id").withColumn("depth", F.lit(0)).limit(0)
-    out = results[0]
-    for r in results[1:]:
-        out = out.unionByName(r)
-    return out
+    out = levels if include_start else levels[1:]
+    return _union(out) if out else frontier.limit(0)
 
 
 def all_paths(
@@ -189,62 +287,50 @@ def all_paths(
     current vertex id) stops descending below a match and diverts it to the
     results (reference: all-paths-to). `leaves_only` emits only rows whose
     expansion is empty (reference: deepest).
+
+    Each level carries a ``_hit`` flag (``to_pred`` of its id) instead of
+    being split in two, so a level is one checkpoint + one count job; only
+    its non-hit rows expand.
     """
+    rec = _record("paths")
     start_df = start.df if isinstance(start, Route) else start
     adj = _loop_adjacency(g, labels, direction)
-    frontier = start_df.select("id").distinct().withColumn(
+    hit = to_pred(F.col("id")) if to_pred is not None else F.lit(False)
+    levels = [start_df.select("id").distinct().withColumn(
         "path", F.array(F.concat(F.lit("v:"), F.col("id")))
-    )
-    results = []
-    emitted_frontiers = []
-    if to_pred is not None:
-        matched = frontier.where(to_pred(F.col("id")))
-        results.append(matched)
-        frontier = frontier.where(~to_pred(F.col("id")))
-    if include_start and to_pred is None and not leaves_only:
-        emitted_frontiers.append(frontier)
-    depth = 0
-    while True:
-        if max_depth is not None and depth >= max_depth:
-            if leaves_only:
-                results.append(frontier)
-            break
-        joined = frontier.join(adj, frontier["id"] == adj["u"], "inner")
-        newpath = F.concat(F.col("path"), F.array(F.concat(F.lit("v:"), F.col("v"))))
-        nxt = (
-            joined.where(~F.array_contains(F.col("path"), F.concat(F.lit("v:"), F.col("v"))))
-            .select(F.col("v").alias("id"), newpath.alias("path"))
+    ).withColumn("_hit", hit)]
+
+    def expand(level: DataFrame, _: int) -> DataFrame:
+        live = level.where(~F.col("_hit"))
+        return (
+            live.join(adj, live["id"] == adj["u"], "inner")
+            .where(~F.array_contains(F.col("path"), F.concat(F.lit("v:"), F.col("v"))))
+            .select(F.col("v").alias("id"), _path_step("v").alias("path"))
+            .withColumn("_hit", hit)
         )
-        nxt = _persist(nxt)
-        if leaves_only:
-            # rows in frontier with no surviving child are leaves
-            has_child = nxt.select(F.col("path").alias("_p")).withColumn(
-                "_parent", F.slice(F.col("_p"), 1, F.size(F.col("_p")) - 1)
-            ).select("_parent").distinct()
-            leaves = frontier.join(
-                has_child, frontier["path"] == has_child["_parent"], "left_anti"
-            )
-            results.append(leaves)
-        if nxt.limit(1).count() == 0:
+
+    for nxt, (n,) in _fixpoint(rec, levels[0], expand, max_depth):
+        if n == 0:
             break
-        if to_pred is not None:
-            matched = nxt.where(to_pred(F.col("id")))
-            results.append(matched)
-            nxt = _persist(nxt.where(~to_pred(F.col("id"))))
-            if nxt.limit(1).count() == 0:
-                break
-        if not leaves_only and to_pred is None:
-            emitted_frontiers.append(nxt)
-        frontier = nxt
-        depth += 1
-    adj.unpersist()
-    all_parts = results + emitted_frontiers
-    if not all_parts:
-        return frontier.limit(0)
-    out = all_parts[0]
-    for r in all_parts[1:]:
-        out = out.unionByName(r)
-    return out
+        levels.append(nxt)
+    parts = []
+    if to_pred is not None:
+        parts += [lv.where(F.col("_hit")) for lv in levels]
+    if leaves_only:
+        # a live row with no child in the next level is a leaf; every
+        # live row of the last level is one (its expansion was empty or
+        # cut by max_depth)
+        for lv, nx in zip(levels, levels[1:]):
+            parents = nx.select(
+                F.slice("path", 1, F.size("path") - 1).alias("_parent")).distinct()
+            parts.append(lv.where(~F.col("_hit")).join(
+                parents, F.col("path") == F.col("_parent"), "left_anti"))
+        parts.append(levels[-1].where(~F.col("_hit")))
+    elif to_pred is None:
+        parts += levels if include_start else levels[1:]
+    if not parts:
+        return levels[0].select("id", "path").limit(0)
+    return _union([p.select("id", "path") for p in parts])
 
 
 def all_paths_with_cycles(
@@ -258,29 +344,23 @@ def all_paths_with_cycles(
     """Path expansion WITHOUT cycle cutting — requires a depth bound
     (reference: all-with-cycles / all-paths-with-cycles,
     src/fermor/core.clj:1112-1122, 1180-1190)."""
+    rec = _record("paths_with_cycles")
     start_df = start.df if isinstance(start, Route) else start
     adj = _loop_adjacency(g, labels, direction)
     frontier = start_df.select("id").distinct().withColumn(
         "path", F.array(F.concat(F.lit("v:"), F.col("id")))
     )
     levels = [frontier] if include_start else []
-    for depth in range(max_depth):
-        frontier = (
-            frontier.join(adj, frontier["id"] == adj["u"], "inner")
-            .select(
-                F.col("v").alias("id"),
-                F.concat(F.col("path"), F.array(F.concat(F.lit("v:"), F.col("v")))).alias("path"),
-            )
-        )
-        frontier = _persist(frontier)
-        if frontier.limit(1).count() == 0:
+
+    def expand(frontier: DataFrame, _: int) -> DataFrame:
+        return frontier.join(adj, frontier["id"] == adj["u"], "inner").select(
+            F.col("v").alias("id"), _path_step("v").alias("path"))
+
+    for nxt, (n,) in _fixpoint(rec, frontier, expand, max_depth):
+        if n == 0:
             break
-        levels.append(frontier)
-    adj.unpersist()
-    out = levels[0]
-    for l in levels[1:]:
-        out = out.unionByName(l)
-    return out
+        levels.append(nxt)
+    return _union(levels) if levels else frontier.limit(0)
 
 
 def square_count(g: PropertyGraph, labels=None) -> DataFrame:
@@ -338,6 +418,7 @@ def square_count(g: PropertyGraph, labels=None) -> DataFrame:
     )
 
 
+
 def all_cycles(
     g: PropertyGraph,
     max_len: int,
@@ -351,6 +432,7 @@ def all_cycles(
     gremlin_examples_test.clj:183-190). Emits one row per (start, cycle)
     orientation, like the reference (each 3-cycle appears once per member).
     """
+    rec = _record("cycles")
     e = g._edges_df(labels)
     adj = _persist(
         e.select(F.col("src").alias("u"), F.col("dst").alias("v"), F.col("label").alias("l"))
@@ -358,10 +440,11 @@ def all_cycles(
     start_df = (start.df if isinstance(start, Route) else start) if start is not None else g.vertex_ids()
     frontier = start_df.select("id").distinct().withColumn(
         "path", F.array(F.concat(F.lit("v:"), F.col("id")))
-    ).withColumn("origin", F.col("id"))
-    cycles = []
-    for depth in range(max_len):
-        joined = frontier.join(adj, frontier["id"] == adj["u"], "inner")
+    ).withColumn("origin", F.col("id")).withColumn("_go", F.lit(True))
+
+    def expand(frontier: DataFrame, _: int) -> DataFrame:
+        live = frontier.where(F.col("_go"))
+        joined = live.join(adj, live["id"] == adj["u"], "inner")
         step_path = (
             F.concat(
                 F.col("path"),
@@ -369,38 +452,59 @@ def all_cycles(
                 F.array(F.concat(F.lit("v:"), F.col("v"))),
             )
             if with_edges
-            else F.concat(F.col("path"), F.array(F.concat(F.lit("v:"), F.col("v"))))
+            else _path_step("v")
         )
         # cut on the PRE-append path: a revisit of a non-origin vertex kills
         # the path; a revisit of the origin closes a cycle
-        expanded = joined.select(
+        return joined.select(
             F.col("v").alias("id"), step_path.alias("path"), F.col("origin"),
-            F.array_contains(F.col("path"), F.concat(F.lit("v:"), F.col("v"))).alias("_seen"),
+            ((F.col("v") != F.col("origin"))
+             & ~F.array_contains(F.col("path"), F.concat(F.lit("v:"), F.col("v")))
+             ).alias("_go"),
         )
-        closed = expanded.where(F.col("id") == F.col("origin")).select("id", "path", "origin")
-        cycles.append(closed)
-        frontier = expanded.where(
-            (F.col("id") != F.col("origin")) & ~F.col("_seen")
-        ).select("id", "path", "origin")
-        cycles[-1] = _persist(cycles[-1])
-        frontier = _persist(frontier)
-        if frontier.limit(1).count() == 0:
+
+    rounds = []
+    live = (F.count(F.when(F.col("_go"), True)),)
+    for nxt, (n_live,) in _fixpoint(rec, frontier, expand, max_len, probe=live):
+        rounds.append(nxt.where(F.col("id") == F.col("origin")).select("path"))
+        if n_live == 0:
             break
-    adj.unpersist()
-    out = cycles[0]
-    for c in cycles[1:]:
-        out = out.unionByName(c)
-    return out.select("path")
+    return _union(rounds) if rounds else frontier.select("path").limit(0)
 
 
 # ------------------------------------------------------------- components
 
 
-# round count of the most recent connected_components call — lets tests
-# assert the O(log n) bound on planted high-diameter fixtures. Diagnostics
-# only, last-call-wins: NOT meaningful if multiple driver threads run
-# connected_components concurrently (never read on any result path).
-LAST_CC_ROUNDS = 0
+# Both stars need min(v) per u attached back to every (u, v) row. A
+# groupBy + self-join pays the grouping exchange AND a join pass per
+# star (2 stars x rounds); a min() window over partitionBy(u) attaches
+# the same constant-per-group value in ONE exchange + sort (§2.4 —
+# "window partitioned by the same key as a preceding aggregation does
+# not need a second shuffle"; here the aggregation IS the window).
+def _large_star(e: DataFrame) -> DataFrame:
+    # symmetric view so Γ(u) sees both orientations
+    sym = e.unionByName(e.select(F.col("v").alias("u"), F.col("u").alias("v")))
+    return (
+        sym.withColumn("m", F.least(F.min("v").over(Window.partitionBy("u")), F.col("u")))
+        .where(F.col("v") > F.col("u"))
+        .select(F.col("v").alias("u"), F.col("m").alias("v"))
+        .where(F.col("u") != F.col("v"))
+        .distinct()
+    )
+
+
+def _small_star(e: DataFrame) -> DataFrame:
+    # input is parent-pointer-shaped: (u, v) with v < u after large-star.
+    # Emitting (u, m) once per EDGE rather than once per group (the old
+    # union of the 1-row-per-u aggregate) is set-identical because the
+    # final distinct collapses the duplicates.
+    withm = e.withColumn("m", F.min("v").over(Window.partitionBy("u")))
+    return (
+        withm.select(F.col("v").alias("u"), F.col("m").alias("v"))
+        .unionByName(withm.select("u", F.col("m").alias("v")))
+        .where(F.col("u") != F.col("v"))
+        .distinct()
+    )
 
 
 def connected_components(g: PropertyGraph, labels=None,
@@ -419,8 +523,8 @@ def connected_components(g: PropertyGraph, labels=None,
     strictly-larger neighbor of u under u's neighborhood minimum, small-star
     re-hangs u and its smaller neighbors under that minimum, and the fixed
     point is a star forest whose centers are the component minima. Each
-    round is two groupBy+join passes over the (shrinking) edge set — no
-    driver-side state beyond a 1-row convergence probe.
+    round is one window pass per star over the (shrinking) edge set — no
+    driver-side state beyond the round's row count.
 
     Distributed/local hybrid (same move as strongly_connected_components):
     once the pair set fits under ``local_edge_threshold``, a driver-side
@@ -433,94 +537,44 @@ def connected_components(g: PropertyGraph, labels=None,
     when per-round shuffle barriers would dominate. Pass 0 to force the
     pure distributed path (tests assert its O(log n) round count).
     """
-    global LAST_CC_ROUNDS
-    adj = _loop_adjacency(g, labels, "both")
+    rec = _record("cc")
     universe = g.vertices_with_edge(labels) if incident_only else g.vertex_ids()
+    # lazy checkpoint: the driver-scale probe or the first count
+    # materializes it, so the distinct runs once on either path
+    edges = (_step_edges(g, labels, "both").where(F.col("u") != F.col("v"))
+             .select("u", "v").distinct().localCheckpoint(eager=False))
 
-    # Both stars need min(v) per u attached back to every (u, v) row. A
-    # groupBy + self-join pays the grouping exchange AND a join pass per
-    # star (2 stars x rounds); a min() window over partitionBy(u) attaches
-    # the same constant-per-group value in ONE exchange + sort (§2.4 —
-    # "window partitioned by the same key as a preceding aggregation does
-    # not need a second shuffle"; here the aggregation IS the window).
-    _wu = Window.partitionBy("u")
+    def local(epdf):
+        comp = _min_label_components(epdf["u"].tolist(), epdf["v"].tolist())
+        if not comp:
+            return None
+        import pandas as pd
 
-    def large_star(e: DataFrame) -> DataFrame:
-        # symmetric view so Γ(u) sees both orientations
-        sym = e.unionByName(e.select(F.col("v").alias("u"), F.col("u").alias("v")))
-        return (
-            sym.withColumn("m", F.least(F.min("v").over(_wu), F.col("u")))
-            .where(F.col("v") > F.col("u"))
-            .select(F.col("v").alias("u"), F.col("m").alias("v"))
-            .where(F.col("u") != F.col("v"))
-            .distinct()
-        )
+        return g.spark.createDataFrame(pd.DataFrame({
+            "id": pd.array(list(comp), dtype="string"),
+            "comp": pd.array(list(comp.values()), dtype="string"),
+        }), "id string, comp string")
 
-    def small_star(e: DataFrame) -> DataFrame:
-        # input is parent-pointer-shaped: (u, v) with v < u after large-star.
-        # Emitting (u, m) once per EDGE rather than once per group (the old
-        # union of the 1-row-per-u aggregate) is set-identical because the
-        # final distinct collapses the duplicates.
-        withm = e.withColumn("m", F.min("v").over(_wu))
-        return (
-            withm.select(F.col("v").alias("u"), F.col("m").alias("v"))
-            .unionByName(withm.select("u", F.col("m").alias("v")))
-            .where(F.col("u") != F.col("v"))
-            .distinct()
-        )
-
-    edges = _persist(
-        adj.where(F.col("u") != F.col("v")).select("u", "v").distinct())
-    n_edges = edges.count()
-    i = 0
     parents = None
-    while True:
-        if local_edge_threshold and n_edges <= local_edge_threshold:
-            # driver-scale finish: exact union-find over the (bounded)
-            # pair set; union toward the smaller id so each root IS the
-            # component minimum. Spark string comparison is UTF-8 byte
-            # order = Python code-point order, so min labels agree.
-            par: dict = {}
-
-            def find(x):
-                r = x
-                while par.get(r, r) != r:
-                    r = par[r]
-                while par.get(x, x) != r:
-                    par[x], x = r, par[x]
-                return r
-
-            epdf = edges.toPandas()   # Arrow-fast for up-to-threshold rows
-            for a, b in zip(epdf["u"].to_numpy(), epdf["v"].to_numpy()):
-                a, b = find(a), find(b)
-                if a != b:
-                    if b < a:
-                        a, b = b, a
-                    par[b] = a
-            if par:
-                import pandas as pd
-
-                keys = list(par)
-                out = pd.DataFrame({
-                    "id": pd.array(keys, dtype="string"),
-                    "comp": pd.array([find(k) for k in keys], dtype="string"),
-                })
-                parents = g.spark.createDataFrame(out, "id string, comp string")
-            break
-        new = _persist(small_star(large_star(edges)))
-        i += 1
-        # symmetric fixed-point test: both sides are distinct sets, so
-        # new ⊆ old together with |new| == |old| means new == old. A
-        # subset-only probe would accept a still-shrinking edge set.
-        n_new = new.count()
-        converged = (
-            n_new == n_edges and new.exceptAll(edges).limit(1).count() == 0
-        )
-        edges.unpersist()
-        edges, n_edges = new, n_new
-        if converged or i >= max_iter:
-            break
-    LAST_CC_ROUNDS = i
+    epdf = _driver_scale(edges, local_edge_threshold)
+    if epdf is not None:
+        parents = local(epdf)
+    else:
+        n_edges = edges.count()
+        contract = lambda e, _: _small_star(_large_star(e))  # noqa: E731
+        for new, (n_new,) in _fixpoint(rec, edges, contract, max_iter):
+            # symmetric fixed-point test: both sides are distinct sets, so
+            # new ⊆ old together with |new| == |old| means new == old. A
+            # subset-only probe would accept a still-shrinking edge set.
+            converged = (
+                n_new == n_edges and new.exceptAll(edges).limit(1).count() == 0
+            )
+            edges, n_edges = new, n_new
+            if converged:
+                break
+            if local_edge_threshold and n_edges <= local_edge_threshold:
+                parents = local(edges.toPandas())
+                break
     # fixed point is a star forest (child → component-min center); vertices
     # never seen as a child are their own component (centers + isolated)
     if parents is None:
@@ -529,16 +583,7 @@ def connected_components(g: PropertyGraph, labels=None,
         universe.join(parents, "id", "left")
         .select("id", F.coalesce(F.col("comp"), F.col("id")).alias("comp"))
     )
-    comp = _persist(comp)
-    edges.unpersist()
-    adj.unpersist()
-    return comp
-
-
-# distributed FW-BW outer rounds of the most recent SCC call — last-call-wins
-# telemetry (same contract as LAST_CC_ROUNDS); 0 = the local finish fired
-# before any flood round
-LAST_SCC_ROUNDS = 0
+    return _persist(comp)
 
 
 def strongly_connected_components(
@@ -571,7 +616,14 @@ def strongly_connected_components(
     set is exact; labels stay min(SCC) (the pivot is its partition's min id,
     hence its SCC's min). Set ``local_edge_threshold=0`` to force the pure
     distributed path (used by tests to exercise the floods).
+
+    Trim passes run on ``_fixpoint`` (record ``scc_trim``). The outer
+    FW-BW rounds and the flood blocks stay hand-rolled: a round is two
+    concurrent floods of several jobs each, and its tagged checkpoint is
+    materialized by the next trim's first-pass aggregate, not by a probe
+    of its own.
     """
+    rec, trim_rec = _record("scc"), _record("scc_trim")
     fwd = _loop_adjacency(g, labels, "out")
     bwd = _loop_adjacency(g, labels, "in")
     # Trim adjacency: self-loops excluded — a vertex whose only cycle is a
@@ -586,13 +638,13 @@ def strongly_connected_components(
         step of the FW-BW-Trim family). Returns (keep, n_keep) so callers
         never re-count the open set.
 
-        ONE materialization per pass (r9): tag every open vertex with a
-        keep flag, checkpoint lazily, and let the first count() materialize
-        it — the previous shape paid three driver barriers per pass (e_open
-        persist + keep checkpoint + peeled checkpoint) for the same result,
-        and trim runs once per FW-BW round, so its barrier count compounds.
+        ONE job per pass (r9, r18): every open vertex is tagged with a
+        keep flag, and the round's aggregate returns both the total and
+        the kept count — and trim runs before round 1 and after every
+        split, so each saved barrier compounds with the round count.
         """
-        while True:
+        def tag(tagged: DataFrame, _: int) -> DataFrame:
+            open_nodes = tagged.where(F.col("_keep")).drop("_keep")
             ids = open_nodes.select("id")
             e_open = (
                 trim_adj
@@ -601,32 +653,22 @@ def strongly_connected_components(
             )
             srcs = e_open.select(F.col("u").alias("id")).distinct()
             dsts = e_open.select(F.col("v").alias("id")).distinct()
-            tagged = (
+            return (
                 open_nodes
                 .join(srcs.withColumn("_s", F.lit(1)), "id", "left")
                 .join(dsts.withColumn("_d", F.lit(1)), "id", "left")
                 .withColumn("_keep", F.col("_s").isNotNull() & F.col("_d").isNotNull())
                 .drop("_s", "_d")
             )
-            tagged = tagged.localCheckpoint(eager=False)
-            keep = tagged.where(F.col("_keep")).drop("_keep")
-            peeled = tagged.where(~F.col("_keep")).select(
-                "id", F.col("id").alias("component")
-            )
-            settled.append(peeled)
-            # both counts in ONE aggregate job (r18, guide §2.4): the
-            # former count()+count() pair paid two driver barriers per
-            # pass for numbers one scan of the checkpoint can produce —
-            # and trim runs before round 1 and after every split, so the
-            # saved barrier compounds with the round count
-            cnts = tagged.agg(
-                F.count(F.lit(1)).alias("_t"),
-                F.count(F.when(F.col("_keep"), True)).alias("_k"),
-            ).first()  # materializes the checkpoint
-            n_tot, n_keep = cnts["_t"], cnts["_k"]
+
+        counts = (F.count(F.lit(1)), F.count(F.when(F.col("_keep"), True)))
+        for tagged, (n_tot, n_keep) in _fixpoint(
+                trim_rec, open_nodes.withColumn("_keep", F.lit(True)), tag,
+                probe=counts):
+            settled.append(tagged.where(~F.col("_keep")).select(
+                "id", F.col("id").alias("component")))
             if n_keep == 0 or n_tot == n_keep:
-                return keep, n_keep
-            open_nodes = keep
+                return tagged.where(F.col("_keep")).drop("_keep"), n_keep
 
     def flood(adj: DataFrame, nodes: DataFrame, hops_per_round: int = 4) -> DataFrame:
         """nodes: (id, part, pivot). Returns (id, part) of vertices reachable
@@ -687,10 +729,7 @@ def strongly_connected_components(
                     .join(reached, ["id", "part"], "left_anti")
                 )
                 hops.append(step)
-            nxt = hops[0]
-            for h in hops[1:]:
-                nxt = nxt.unionByName(h)
-            nxt = nxt.distinct()
+            nxt = _union(hops).distinct()
             # lazy checkpoint + count = ONE job per block (eager checkpoint
             # then count paid two driver round trips for the same answer)
             nxt = nxt.localCheckpoint(eager=False)
@@ -708,13 +747,11 @@ def strongly_connected_components(
     def local_finish(open_nodes: DataFrame, settled: list) -> bool:
         """Collect the open subgraph and finish with driver Tarjan if it has
         ≤ local_edge_threshold internal same-partition edges AND vertices
-        (both probed with short-circuiting limit(n+1) collects, so a
+        (both probed with short-circuiting limit(n+1) fetches, so a
         too-large open set never materializes on the driver)."""
-        if local_edge_threshold <= 0:
-            return False
         ids = open_nodes.select("id", "part")
-        id_sample = ids.select("id").limit(local_edge_threshold + 1).collect()
-        if len(id_sample) > local_edge_threshold:
+        id_pdf = _driver_scale(ids.select("id"), local_edge_threshold)
+        if id_pdf is None:
             return False
         e_open = (
             trim_adj
@@ -723,13 +760,13 @@ def strongly_connected_components(
             .where(F.col("_pu") == F.col("_pv"))
             .select("u", "v")
         )
-        sample = e_open.limit(local_edge_threshold + 1).collect()
-        if len(sample) > local_edge_threshold:
+        e_pdf = _driver_scale(e_open, local_edge_threshold)
+        if e_pdf is None:
             return False
         from fermor_spark import algo as _algo
-        succ: dict = {r["id"]: [] for r in id_sample}
-        for r in sample:
-            succ.setdefault(r["u"], []).append(r["v"])
+        succ: dict = {v: [] for v in id_pdf["id"].tolist()}
+        for u, v in zip(e_pdf["u"].tolist(), e_pdf["v"].tolist()):
+            succ.setdefault(u, []).append(v)
         comps = _algo.strongly_connected_components(succ, include_singletons=True)
         # plain lexicographic min — identical to the distributed path's
         # F.min pivot label and the SQL oracles' min()
@@ -738,8 +775,6 @@ def strongly_connected_components(
             settled.append(local_frame(g.spark, rows, "id string, component string"))
         return True
 
-    global LAST_SCC_ROUNDS
-    LAST_SCC_ROUNDS = 0
     settled = []
     open_nodes = g.vertex_ids().withColumn("part", F.lit("0"))
     # fast path: a driver-scale graph skips the trim barrier rounds entirely
@@ -747,12 +782,11 @@ def strongly_connected_components(
     n_open = -1
     if not done:
         open_nodes, n_open = trim(open_nodes, settled)
-    for rnd in range(0 if done else max_outer):
+    for _ in range(0 if done else max_outer):
         if n_open == 0:
             break
         if local_finish(open_nodes, settled):
             break
-        LAST_SCC_ROUNDS = rnd + 1
         pivots = open_nodes.groupBy("part").agg(F.min("id").alias("pivot"))
         nodes = open_nodes.join(pivots, "part")
         # the two directions' floods are independent: run them on two driver
@@ -796,24 +830,19 @@ def strongly_connected_components(
         # n_open == 0 and the loop top breaks, saving one barrier per
         # round for the same answer.
         open_nodes, n_open = trim(remaining, settled)
-    fwd.unpersist()
-    bwd.unpersist()
-    trim_adj.unpersist()
+        rec.append(n_open)
     if not settled:
         return local_frame(g.spark, [], "id string, component string")
-    out = settled[0]
-    for s in settled[1:]:
-        out = out.unionByName(s)
-    return out
+    return _union(settled)
 
 
 # ------------------------------------------------------------ shortest paths
 
 
-# distributed Bellman-Ford relaxation rounds of the most recent
-# shortest_path_weighted call — last-call-wins telemetry; 0 = the numpy
-# local finish ran instead
-LAST_BF_ROUNDS = 0
+def _improved() -> F.Column:
+    """Relaxation probe: ids whose distance is new (no carried ``_od``) or
+    strictly lower than the carried one."""
+    return F.count(F.when(F.col("_od").isNull() | (F.col("dist") < F.col("_od")), True))
 
 
 def shortest_path_weighted(
@@ -838,69 +867,62 @@ def shortest_path_weighted(
     bit-identical results (min over identical per-edge sum candidates,
     order-independent), O(diameter) barrier rounds saved. Pass 0 to
     force the distributed path."""
-    global LAST_BF_ROUNDS
-    LAST_BF_ROUNDS = 0
+    rec = _record("bf")
     src_df = sources.df if isinstance(sources, Route) else sources
     adj = _persist(_step_edges(g, labels, direction).select(
         "u", "v", F.coalesce(F.col("w"), F.lit(default_weight)).alias("w")
     ))
-    if local_edge_threshold and adj.count() <= local_edge_threshold:
-        # null sources are dropped on BOTH legs (see the distributed init
-        # below): here a None start would KeyError at d[ix[s]] since ids
-        # excludes None; distributed, a null join key matches nothing.
-        # The null drop must precede the limit probe — a null row occupying
-        # one of the threshold+1 slots would let the local leg accept a
-        # source set whose real (non-null) cardinality exceeds the limit,
-        # silently truncating sources instead of falling through.
-        starts = [r["id"] for r in src_df.select("id")
-                  .where(F.col("id").isNotNull()).distinct()
-                  .limit(local_edge_threshold + 1).collect()]
-        if len(starts) <= local_edge_threshold:
-            import numpy as np
-            import pandas as pd
+    # null sources are dropped on BOTH legs (see the distributed init
+    # below): here a None start would KeyError at d[ix[s]] since ids
+    # excludes None; distributed, a null join key matches nothing.
+    # The null drop must precede the limit probe — a null row occupying
+    # one of the threshold+1 slots would let the local leg accept a
+    # source set whose real (non-null) cardinality exceeds the limit,
+    # silently truncating sources instead of falling through.
+    src_ids = src_df.select("id").where(F.col("id").isNotNull()).distinct()
+    apdf = _driver_scale(adj, local_edge_threshold)
+    spdf = None if apdf is None else _driver_scale(src_ids, local_edge_threshold)
+    if spdf is not None:
+        import numpy as np
+        import pandas as pd
 
-            apdf = adj.toPandas()
-            # construction drops null-endpoint edges, but raw-DataFrame
-            # callers can still hand them in — a None would make sorted()
-            # raise and the ix lookup KeyError
-            apdf = apdf[apdf["u"].notna() & apdf["v"].notna()]
-            ids = sorted((set(apdf["u"]) | set(apdf["v"]) | set(starts))
-                         - {None})
-            ix = {v: i for i, v in enumerate(ids)}
-            su = np.fromiter((ix[u] for u in apdf["u"]), np.int64, len(apdf))
-            sv = np.fromiter((ix[v] for v in apdf["v"]), np.int64, len(apdf))
-            w = apdf["w"].to_numpy(dtype=np.float64)
-            d = np.full(len(ids), np.inf)
-            for s in starts:
-                d[ix[s]] = 0.0
-            for _ in range(max_iter):
-                nd = d.copy()
-                np.minimum.at(nd, sv, d[su] + w)
-                if np.array_equal(nd, d):
-                    break
-                d = nd
-            adj.unpersist()
-            reach = np.isfinite(d).nonzero()[0]
-            out = pd.DataFrame({
-                "id": pd.array([ids[i] for i in reach], dtype="string"),
-                "dist": d[reach],
-            })
-            return g.spark.createDataFrame(out, "id string, dist double")
-    dist = (src_df.select("id").where(F.col("id").isNotNull())
-            .distinct().withColumn("dist", F.lit(0.0)))
+        starts = spdf["id"].tolist()
+        # construction drops null-endpoint edges, but raw-DataFrame
+        # callers can still hand them in — a None would make sorted()
+        # raise and the ix lookup KeyError
+        apdf = apdf[apdf["u"].notna() & apdf["v"].notna()]
+        ids = sorted((set(apdf["u"]) | set(apdf["v"]) | set(starts))
+                     - {None})
+        ix = {v: i for i, v in enumerate(ids)}
+        su = np.fromiter((ix[u] for u in apdf["u"]), np.int64, len(apdf))
+        sv = np.fromiter((ix[v] for v in apdf["v"]), np.int64, len(apdf))
+        w = apdf["w"].to_numpy(dtype=np.float64)
+        d = np.full(len(ids), np.inf)
+        for s in starts:
+            d[ix[s]] = 0.0
+        for _ in range(max_iter):
+            nd = d.copy()
+            np.minimum.at(nd, sv, d[su] + w)
+            if np.array_equal(nd, d):
+                break
+            d = nd
+        reach = np.isfinite(d).nonzero()[0]
+        out = pd.DataFrame({
+            "id": pd.array([ids[i] for i in reach], dtype="string"),
+            "dist": d[reach],
+        })
+        return g.spark.createDataFrame(out, "id string, dist double")
+
     # Convergence probe FUSED into the relaxation aggregate (r17 opt,
-    # guide §2.4 "remove shuffles outright"): the old shape paid TWO jobs
-    # per round — an eager checkpoint of the min-aggregate, then a probe
-    # that re-JOINED the new table against the old one (its own exchanges)
-    # just to ask "did any distance improve". Tagging the carried rows
+    # guide §2.4 "remove shuffles outright"): tagging the carried rows
     # lets ONE groupBy compute both the new minimum and the old distance
     # (min over the tagged subset — old has exactly one row per id), so
-    # improvement is a plain filter over the aggregate's own output: the
-    # probe join's exchanges vanish and the lazy checkpoint + filtered
-    # count materialize in a single job per round (the SCC-trim pattern).
-    # Identical semantics: new dist = min(old, relaxed candidates);
-    # improved ⟺ some id is new (old null) or strictly better.
-    for i in range(max_iter):
+    # improvement is a plain filter over the aggregate's own output and
+    # no probe join re-reads the previous round. Identical semantics: new
+    # dist = min(old, relaxed candidates); improved ⟺ some id is new (old
+    # null) or strictly better.
+    def relax(dist: DataFrame, _: int) -> DataFrame:
+        dist = dist.select("id", "dist")
         relaxed = (
             dist.join(adj, dist["id"] == adj["u"], "inner")
             .select(F.col("v").alias("id"), (F.col("dist") + F.col("w")).alias("dist"))
@@ -908,27 +930,17 @@ def shortest_path_weighted(
         cand = dist.select(
             "id", "dist", F.lit(True).alias("_old")
         ).unionByName(relaxed.select("id", "dist", F.lit(False).alias("_old")))
-        new = (
+        return (
             cand.groupBy("id")
             .agg(F.min("dist").alias("dist"),
                  F.min(F.when(F.col("_old"), F.col("dist"))).alias("_od"))
-            .localCheckpoint(eager=False)
         )
-        improved = new.where(
-            F.col("_od").isNull() | (F.col("dist") < F.col("_od"))
-        ).count()  # materializes the checkpoint AND probes in one job
-        # No explicit release of the previous round's checkpoint:
-        # Dataset.unpersist only uncaches CacheManager-registered plans and
-        # local-checkpoint RDD blocks are not registered there (a call here
-        # was a documented no-op — ADVICE r17). Each round's blocks are
-        # dereferenced when `dist` is rebound and reaped by ContextCleaner
-        # after GC; bench.py's per-query drain forces that promptly.
-        dist = new.select("id", "dist")
-        LAST_BF_ROUNDS = i + 1
+
+    dist = src_ids.withColumn("dist", F.lit(0.0))
+    for dist, (improved,) in _fixpoint(rec, dist, relax, max_iter, probe=(_improved(),)):
         if improved == 0:
             break
-    adj.unpersist()
-    return dist
+    return dist.select("id", "dist")
 
 
 def descend(
@@ -961,25 +973,29 @@ def descend(
     chain/siblings sequencing bits — order-dependent semantics with no
     distributed meaning (documented delta, SURVEY §4.3; subtree semantics
     are exact — see tests/test_iterate_extra.py control-signal cases).
-    The DFS-ordered emission becomes breadth-first levels; the NoResult
-    starvation failsafe becomes the max_depth guard.
+    The DFS-ordered emission becomes breadth-first levels (depths 0 to
+    max_depth - 1); the NoResult starvation failsafe becomes the max_depth
+    guard.
     """
-    frontier = start
-    emitted = []
-    for depth in range(max_depth):
-        df = frontier.df
-        emit_rows = df.where(emit_pred) if emit_pred is not None else df
-        emitted.append(emit_rows.withColumn("_depth", F.lit(depth)))
+    rec = _record("descend")
+    route = start  # the latest Route, whose traversal state frames wrap
+    levels = [start.df]
+
+    def expand(df: DataFrame, _: int) -> DataFrame:
+        nonlocal route
+        frontier = route._with(df)
         to_descend = frontier._with(df.where(descend_pred)) if descend_pred is not None else frontier
-        nxt = children(to_descend)
-        nxt_df = _persist(nxt.df)
-        if nxt_df.limit(1).count() == 0:
+        route = children(to_descend)
+        return route.df
+
+    for nxt, (n,) in _fixpoint(rec, start.df, expand, max_depth - 1):
+        if n == 0:
             break
-        frontier = nxt._with(nxt_df)
-    out = emitted[0]
-    for e in emitted[1:]:
-        out = out.unionByName(e, allowMissingColumns=True)
-    return out
+        levels.append(nxt)
+    return _union([
+        (lv.where(emit_pred) if emit_pred is not None else lv).withColumn("_depth", F.lit(d))
+        for d, lv in enumerate(levels)
+    ], allowMissingColumns=True)
 
 
 def shortest_path_with_routes(
@@ -995,40 +1011,39 @@ def shortest_path_with_routes(
     The reference's shortest-path returns the path via Dijkstra with a user
     cost fn (src/fermor/graph/algo.clj:92-125); here relaxation carries the
     path array and keeps the (dist, path)-lexicographic minimum per vertex —
-    deterministic under ties.
+    deterministic under ties. The improvement probe is fused into the
+    relaxation aggregate exactly as in shortest_path_weighted.
     """
+    rec = _record("sp_routes")
     src_df = sources.df if isinstance(sources, Route) else sources
     adj = _persist(_step_edges(g, labels, direction).select(
         "u", "v", F.coalesce(F.col("w"), F.lit(default_weight)).alias("w")
     ))
-    dist = src_df.select("id").distinct().select(
-        "id", F.lit(0.0).alias("dist"), F.array(F.col("id")).alias("path")
-    )
-    for i in range(max_iter):
+
+    def relax(dist: DataFrame, _: int) -> DataFrame:
+        dist = dist.select("id", "dist", "path")
         relaxed = dist.join(adj, dist["id"] == adj["u"], "inner").select(
             F.col("v").alias("id"),
             (F.col("dist") + F.col("w")).alias("dist"),
             F.concat(F.col("path"), F.array(F.col("v"))).alias("path"),
         )
-        new = (
-            dist.unionByName(relaxed)
+        return (
+            dist.withColumn("_old", F.lit(True))
+            .unionByName(relaxed.withColumn("_old", F.lit(False)))
             .groupBy("id")
-            .agg(F.min(F.struct("dist", "path")).alias("best"))
-            .select("id", F.col("best.dist").alias("dist"), F.col("best.path").alias("path"))
+            .agg(F.min(F.struct("dist", "path")).alias("best"),
+                 F.min(F.when(F.col("_old"), F.col("dist"))).alias("_od"))
+            .select("id", F.col("best.dist").alias("dist"),
+                    F.col("best.path").alias("path"), "_od")
         )
-        new = _persist(new)
-        improved = (
-            new.alias("n").join(dist.alias("o"), "id", "left")
-            .where(F.col("o.dist").isNull() | (F.col("n.dist") < F.col("o.dist")))
-            .limit(1).count()
-        )
-        if i > 0:
-            dist.unpersist()
-        dist = new
+
+    dist = src_df.select("id").distinct().select(
+        "id", F.lit(0.0).alias("dist"), F.array(F.col("id")).alias("path")
+    )
+    for dist, (improved,) in _fixpoint(rec, dist, relax, max_iter, probe=(_improved(),)):
         if improved == 0:
             break
-    adj.unpersist()
-    return dist
+    return dist.select("id", "dist", "path")
 
 
 def breadth_first_nodes(g: PropertyGraph, start, labels=None, direction: str = "out") -> DataFrame:
@@ -1119,12 +1134,13 @@ def iterate_route(route: Route, f: Callable[[Route], Route], n: int) -> Route:
     return route
 
 
+
 # -------------------------------------------- whole-graph vertex rankings
 #
 # Beyond the reference's surface: ranking/community/core algorithms a
 # 100 TB-scale graph user expects alongside CC/SCC. Same loop discipline
-# as the rest of this module (adjacency checkpointed once, per-iteration
-# localCheckpoint, superseded frames unpersisted).
+# as the rest of this module (adjacency checkpointed once, rounds on
+# _fixpoint).
 
 
 def pagerank(
@@ -1148,12 +1164,13 @@ def pagerank(
     u + one groupBy(v) partial-aggregated sum — the minimal Pregel-step
     cost. The dangling term is one tiny scalar aggregate per iteration
     (same cost class as the convergence probes elsewhere in this module).
-    Fixed `iters` (no convergence probe) keeps the job count predictable;
+    Fixed `iters` (no convergence test) keeps the job count predictable;
     PageRank residuals decay geometrically by `damping`, so iters≈10 gives
     ~d^10 ≈ 0.2 residual and iters≈50 machine-precision stationarity.
     """
     if dangling not in ("redistribute", "none"):
         raise ValueError(f"dangling must be 'redistribute'|'none', not {dangling!r}")
+    rec = _record("pagerank")
     adj = _loop_adjacency(g, labels, direction)
     # null ids are excluded from the universe BEFORE counting: the local
     # finish drops them from `ids` (sorted()/ix can't hold None), so an
@@ -1165,7 +1182,8 @@ def pagerank(
     n = universe.count()
     if n == 0:
         return universe.withColumn("rank", F.lit(0.0))
-    if local_edge_threshold and adj.count() <= local_edge_threshold:
+    apdf = _driver_scale(adj, local_edge_threshold)
+    if apdf is not None:
         # driver-scale finish (same threshold discipline as CC/SCC/k-core/
         # BFS): fixed-iteration power iteration costs `iters` barrier
         # rounds distributed — on a driver-scale edge set the same float64
@@ -1175,11 +1193,10 @@ def pagerank(
         import numpy as np
         import pandas as pd
 
-        apdf = adj.toPandas()
         # defensive mirror of the construction-time null-endpoint rule
         # (raw-DataFrame callers): None ids break sorted()/ix lookups
         apdf = apdf[apdf["u"].notna() & apdf["v"].notna()]
-        ids = sorted({r["id"] for r in universe.collect()} - {None})
+        ids = sorted(set(universe.select("id").toPandas()["id"].tolist()) - {None})
         ix = {v: i for i, v in enumerate(ids)}
         src = np.fromiter((ix[u] for u in apdf["u"]), dtype=np.int64,
                           count=len(apdf))
@@ -1195,15 +1212,13 @@ def pagerank(
             c = np.bincount(dst, weights=share[src], minlength=n)
             dm = rank[~nonzero].sum() if dangling == "redistribute" else 0.0
             rank = base + damping * (c + dm / n)
-        adj.unpersist()
-        universe.unpersist()
         out = pd.DataFrame({"id": pd.array(ids, dtype="string"),
                             "rank": rank})
         return g.spark.createDataFrame(out, "id string, rank double")
     deg = _persist(adj.groupBy("u").agg(F.count("*").alias("deg")))
-    ranks = universe.withColumn("rank", F.lit(1.0 / n))
     base = (1.0 - damping) / n
-    for i in range(iters):
+
+    def power_step(ranks: DataFrame, _: int) -> DataFrame:
         contrib_src = ranks.join(deg, ranks["id"] == deg["u"], "inner").select(
             F.col("u"), (F.col("rank") / F.col("deg")).alias("share")
         )
@@ -1222,7 +1237,7 @@ def pagerank(
             )
         else:
             dm_df = ranks.sparkSession.range(1).select(F.lit(0.0).alias("_dm"))
-        new = (
+        return (
             ranks.select("id").join(contrib, "id", "left")
             .crossJoin(F.broadcast(dm_df))
             .select(
@@ -1234,13 +1249,10 @@ def pagerank(
                 ).alias("rank"),
             )
         )
-        new = _persist(new)
-        if i > 0:
-            ranks.unpersist()
-        ranks = new
-    adj.unpersist()
-    deg.unpersist()
-    universe.unpersist()
+
+    ranks = universe.withColumn("rank", F.lit(1.0 / n))
+    for ranks, _ in _fixpoint(rec, ranks, power_step, iters):
+        pass
     return ranks
 
 
@@ -1261,11 +1273,11 @@ def label_propagation(
     Per iteration: one frontier⋈adjacency join + one groupBy(v, label)
     count + one per-vertex window top-1 — all shuffles on vertex id.
     """
+    rec = _record("lpa")
     adj = _loop_adjacency(g, labels, "both")
     comm = _persist(g.vertices_with_edge(labels).withColumn("community", F.col("id")))
-    from pyspark.sql import Window
 
-    for i in range(iters):
+    def adopt(comm: DataFrame, _: int) -> DataFrame:
         freq = (
             comm.join(adj, comm["id"] == adj["u"], "inner")
             .groupBy(F.col("v").alias("id"), F.col("community"))
@@ -1277,21 +1289,15 @@ def label_propagation(
             .where(F.col("_rn") == 1)
             .select("id", F.col("community").alias("best"))
         )
-        new = (
+        return (
             comm.select("id", F.col("community").alias("old"))
             .join(best, "id", "left")
             .select("id", F.coalesce("best", "old").alias("community"))
         )
-        new = _persist(new)
-        comm.unpersist()
-        comm = new
-    adj.unpersist()
+
+    for comm, _ in _fixpoint(rec, comm, adopt, iters):
+        pass
     return comm
-
-
-# peel-round count of the most recent k_core call — diagnostics only,
-# last-call-wins (same contract as LAST_CC_ROUNDS)
-LAST_KCORE_ROUNDS = 0
 
 
 def k_core(g: PropertyGraph, k: int, labels=None, max_iters: int = 500,
@@ -1312,31 +1318,32 @@ def k_core(g: PropertyGraph, k: int, labels=None, max_iters: int = 500,
     map-side semi-join, so per-round work is proportional to the removed
     frontier's edges, not to |E|). Rounds remain O(peel-depth) — inherent
     to exact k-core — so the lever on deep-cascade graphs is per-round
-    OVERHEAD: one checkpoint job per round (the frontier is a trivial
-    filter over the checkpointed degree table, recomputed lazily in both
-    plan legs instead of checkpointed itself), with the convergence probe
-    fused into the checkpoint's row count (count unchanged ⟺ frontier was
-    empty ⟺ fixed point). A lazily-persisted multi-level batch was tried
-    and REJECTED: AQE compiles the deep chained plan into far more shuffle
-    stages than the flat loop (see PLANS.md). Parallel edges count once
-    per edge, self-loops are excluded (standard core-number convention).
+    OVERHEAD: one job per round (the frontier is a trivial filter over the
+    checkpointed degree table, recomputed lazily in both plan legs instead
+    of checkpointed itself), the round's row count doubling as the
+    convergence probe (count unchanged ⟺ frontier was empty ⟺ fixed
+    point). A lazily-persisted multi-level batch was tried and REJECTED:
+    AQE compiles the deep chained plan into far more shuffle stages than
+    the flat loop (see PLANS.md). Parallel edges count once per edge,
+    self-loops are excluded (standard core-number convention).
     """
-    global LAST_KCORE_ROUNDS
+    rec = _record("kcore")
     e = _persist(
         _step_edges(g, labels, "both")
         .where(F.col("u") != F.col("v"))
         .select("u", "v")
         .distinct()  # 'both' emits each undirected edge once per direction
     )
-    if local_edge_threshold and e.count() <= local_edge_threshold:
+    epdf = _driver_scale(e, local_edge_threshold)
+    if epdf is not None:
         # driver-scale finish: Matula-Beck-style queue peel over the
         # (bounded) directed pair set — each undirected edge is present
         # in both orientations, so deg(u) = #outgoing rows
         from collections import defaultdict, deque
 
         nbrs: dict = defaultdict(list)
-        for row in e.collect():
-            nbrs[row["u"]].append(row["v"])
+        for u, v in zip(epdf["u"].tolist(), epdf["v"].tolist()):
+            nbrs[u].append(v)
         deg_l = {u: len(vs) for u, vs in nbrs.items()}
         q = deque(u for u, d in deg_l.items() if d < k)
         removed = set()
@@ -1350,16 +1357,14 @@ def k_core(g: PropertyGraph, k: int, labels=None, max_iters: int = 500,
                     deg_l[v] -= 1
                     if deg_l[v] < k:
                         q.append(v)
-        LAST_KCORE_ROUNDS = 0  # no distributed rounds ran
-        e.unpersist()
         rows = [(u, deg_l[u]) for u in nbrs if u not in removed]
         return local_frame(g.spark, rows, "id string, deg long")
 
-    deg = _persist(
-        e.groupBy("u").agg(F.count("*").alias("deg")).withColumnRenamed("u", "id"))
+    deg = (e.groupBy("u").agg(F.count("*").alias("deg"))
+           .withColumnRenamed("u", "id").localCheckpoint(eager=False))
     n = deg.count()
-    rounds = 0
-    while rounds < max_iters:
+
+    def peel(deg: DataFrame, _: int) -> DataFrame:
         fr = deg.where(F.col("deg") < k).select("id")
         # edges lost by survivors: one per (frontier u → v) edge; rows whose
         # v was removed (this round or earlier) drop out in the anti-join
@@ -1380,18 +1385,14 @@ def k_core(g: PropertyGraph, k: int, labels=None, max_iters: int = 500,
         # its own scheduled job exactly like the shuffle it replaces) nor
         # the interleaved gate A/B (1.02-1.05x, flat at floor), because
         # AQE already broadcasts the runtime-small frontier on its own.
-        new_deg = _persist(
+        return (
             deg.join(fr, "id", "left_anti")
             .join(delta, "id", "left")
             .select("id", (F.col("deg") - F.coalesce(F.col("_d"), F.lit(0))).alias("deg"))
         )
-        m = new_deg.count()
-        rounds += 1
-        deg.unpersist()
-        deg = new_deg
+
+    for deg, (m,) in _fixpoint(rec, deg, peel, max_iters):
         if m == n:  # nothing removed → frontier was empty → fixed point
             break
         n = m
-    LAST_KCORE_ROUNDS = rounds
-    e.unpersist()
     return deg.select("id", "deg")

@@ -10,11 +10,18 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from fermor_spark.iterate import (
+    _driver_scale, _fixpoint, _min_label_components, _persist, _record, round_rows)
 from fermor_spark.session import managed_cache
 
-# distributed min-propagation rounds of the most recent dedup_clusters call —
-# last-call-wins telemetry; 0 = the driver union-find finish ran instead
-LAST_CLUSTER_ROUNDS = 0
+
+def __getattr__(name: str):
+    # PEP 562: min-propagation rounds of the calling context's most recent
+    # dedup_clusters call (iterate's round record); 0 = the driver
+    # union-find finish ran instead
+    if name == "LAST_CLUSTER_ROUNDS":
+        return len(round_rows("cluster"))
+    raise AttributeError(f"module {__name__!r} has no attribute {name!r}")
 
 
 def exact_dedup(df: DataFrame, key_cols: list[str], order_cols: list[str]) -> DataFrame:
@@ -575,82 +582,55 @@ def dedup_clusters(pairs: DataFrame, all_ids: DataFrame,
     Distributed/local hybrid (iterate.connected_components discipline):
     near-dup candidate pair sets are tiny relative to the corpus (LSH
     keeps them so by construction), so under ``local_pair_threshold`` the
-    closure is a driver union-find whose (id, cluster) map broadcasts
-    back against all_ids — replacing up-to-50 min-propagation rounds
-    with one broadcast join. Pass 0 to force the distributed path."""
-    global LAST_CLUSTER_ROUNDS
-    LAST_CLUSTER_ROUNDS = 0
+    closure is the driver union-find CC uses, whose (id, cluster) map
+    broadcasts back against all_ids — replacing up-to-50 min-propagation
+    rounds with one broadcast join. Pass 0 to force the distributed path,
+    whose rounds run on iterate's round driver (record ``cluster``)."""
+    rec = _record("cluster")
+    base = all_ids.select(F.col(all_ids.columns[0]).alias("id"))
     # Probe and fetch in ONE evaluation: pairs is typically the expensive
     # LSH-verify join, so a count() gate followed by toPandas() would run
-    # the whole upstream pipeline twice. limit(threshold+1) short-circuits
-    # like the other hybrids' probes; len(ppdf) > threshold means the local
-    # path is off the table and the fetched rows are discarded.
-    ppdf = None
-    if local_pair_threshold:
-        ppdf = (pairs.select("id_a", "id_b")
-                .limit(local_pair_threshold + 1).toPandas())
-        if len(ppdf) > local_pair_threshold:
-            ppdf = None
+    # the whole upstream pipeline twice.
+    ppdf = _driver_scale(pairs.select("id_a", "id_b"), local_pair_threshold)
     if ppdf is not None:
         import pandas as pd
 
-        par: dict = {}
-
-        def find(x):
-            r = x
-            while par.get(r, r) != r:
-                r = par[r]
-            while par.get(x, x) != r:
-                par[x], x = r, par[x]
-            return r
-
-        def py(x):
-            return x.item() if hasattr(x, "item") else x
-
-        for a, b in zip(ppdf["id_a"], ppdf["id_b"]):
-            a, b = find(py(a)), find(py(b))
-            if a != b:
-                if b < a:
-                    a, b = b, a
-                par[b] = a
-        base = all_ids.select(F.col(all_ids.columns[0]).alias("id"))
-        if not par:
+        comp = _min_label_components(ppdf["id_a"].tolist(), ppdf["id_b"].tolist())
+        if not comp:
             return base.withColumn("cluster", F.col("id"))
         id_t = pairs.schema["id_a"].dataType.simpleString()
-        m = pd.DataFrame([(k, find(k)) for k in par], columns=["id", "_c"])
+        m = pd.DataFrame({"id": list(comp), "_c": list(comp.values())})
         mdf = base.sparkSession.createDataFrame(m, f"id {id_t}, _c {id_t}")
         return (
             base.join(F.broadcast(mdf), "id", "left")
             .select("id", F.coalesce(F.col("_c"), F.col("id")).alias("cluster"))
         )
-    adj = (
+    # materialized once: every round joins it, and a lazy pair set would
+    # re-run the upstream LSH pipeline inside each round
+    adj = _persist(
         pairs.select(F.col("id_a").alias("u"), F.col("id_b").alias("v"))
         .unionByName(pairs.select(F.col("id_b").alias("u"), F.col("id_a").alias("v")))
     )
-    comp = all_ids.select(F.col(all_ids.columns[0]).alias("id")).withColumn(
-        "cluster", F.col("id")
-    )
-    for i in range(50):
+
+    def lower(comp: DataFrame, _: int) -> DataFrame:
         neigh = (
             comp.join(adj, comp["id"] == adj["u"], "inner")
             .groupBy(F.col("v").alias("id"))
             .agg(F.min("cluster").alias("nc"))
         )
-        new = comp.join(neigh, "id", "left").select(
-            "id", F.least(F.col("cluster"), F.coalesce(F.col("nc"), F.col("cluster"))).alias("cluster")
+        return comp.select("id", "cluster").join(neigh, "id", "left").select(
+            "id", F.least(F.col("cluster"), F.coalesce(F.col("nc"), F.col("cluster"))).alias("cluster"),
+            (F.col("nc") < F.col("cluster")).alias("_lowered"),
         )
-        new = new.localCheckpoint(eager=True)
-        changed = (
-            new.alias("n").join(comp.alias("o"), "id")
-            .where(F.col("n.cluster") != F.col("o.cluster")).limit(1).count()
-        )
-        if i > 0:
-            comp.unpersist()
-        comp = new
-        LAST_CLUSTER_ROUNDS = i + 1
-        if changed == 0:
+
+    # the round's fixed-point probe is the count of lowered labels, fused
+    # into the job that materializes the round (labels only ever fall)
+    lowered = (F.count(F.when(F.col("_lowered"), True)),)
+    comp = base.withColumn("cluster", F.col("id"))
+    for comp, (n,) in _fixpoint(rec, comp, lower, 50, probe=lowered):
+        if n == 0:
             break
-    return comp
+    return comp.select("id", "cluster")
 
 
 def duplicated_spans(

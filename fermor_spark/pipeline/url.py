@@ -18,14 +18,6 @@ from pyspark.sql import functions as F
 # query parameters that identify a click, not a page (C4/CC-style screen)
 TRACKING_PARAMS = r"^(utm_[^=]*|fbclid|gclid|msclkid|ref|mc_eid)(=|$)"
 
-# Which leg robots_filter planned last: "broadcast" (driver-parsed rules
-# ride a SparkContext broadcast) or "join" (rules parse distributed and
-# join on host). Last-call-wins telemetry, kept for interactive probes —
-# forced-leg gates must NOT read it (concurrent plan construction races
-# it); they read the per-call `robots_path` attribute robots_filter sets
-# on its returned DataFrame instead (ADVICE r12).
-LAST_ROBOTS_PATH = ""
-
 # Driver-broadcast ceiling for blocklist/robots artifacts. A UT1-class
 # blocklist (~4M short domains) and a polite crawl's robots cache both fit
 # comfortably; a 100 TB crawl's full robots table (tens of millions of
@@ -347,21 +339,17 @@ def robots_filter(df: DataFrame, url_col: str, robots_df: DataFrame,
     path with it).
 
     The returned DataFrame carries ``robots_path`` ("broadcast"|"join")
-    — per-call leg telemetry safe under concurrent plan construction,
-    unlike the module-global LAST_ROBOTS_PATH it supersedes for
-    assertions. It is a plain Python attribute, NOT plan metadata: read
+    — per-call leg telemetry, safe under concurrent plan construction.
+    It is a plain Python attribute, NOT plan metadata: read
     it on the returned object BEFORE any further transformation (every
     .select/.where returns a fresh DataFrame without it)."""
     import pandas as pd
-
-    global LAST_ROBOTS_PATH
 
     u = F.col(url_col)
     host = F.lower(_part(u, "HOST"))
     path = F.coalesce(_part(u, "PATH"), F.lit("/"))
 
     if _driver_sized(robots_df, max_broadcast_rows):
-        LAST_ROBOTS_PATH = "broadcast"
         fetched = robots_df.select(F.lower(F.col("host")).alias("h"),
                                    F.col("robots_txt")).collect()
         rules = {r["h"]: parse_robots(r["robots_txt"] or "", agent)
@@ -385,8 +373,6 @@ def robots_filter(df: DataFrame, url_col: str, robots_df: DataFrame,
     # pass, no shuffle), join the (host, rules) table on host. The rules
     # arrays are small per host; only hosts that appear in df's partition
     # keys move.
-    LAST_ROBOTS_PATH = "join"
-
     def _parse(batches):
         for pdf in batches:
             yield pd.DataFrame({

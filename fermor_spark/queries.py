@@ -4962,9 +4962,9 @@ def pipeline_robots_forced_join(spark: SparkSession, sf_dir: str
         .alias("robots_txt"))
     out = robots_filter(urls, "url", real.unionByName(pad),
                         max_broadcast_rows=0)
-    # per-call leg telemetry (ADVICE r12): the module-global
-    # LAST_ROBOTS_PATH is last-call-wins and races concurrent plan
-    # construction; RuntimeError, not assert — python -O strips asserts
+    # per-call leg telemetry (ADVICE r12): a module global would be
+    # last-call-wins and race concurrent plan construction; RuntimeError,
+    # not assert — python -O strips asserts
     if getattr(out, "robots_path", None) != "join":
         raise RuntimeError("forced robots join leg did not run")
     return out.select(
@@ -5830,9 +5830,9 @@ def events_streaming_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
     r15: state partitions scoped to 8 over the drain (the last stateful
     gate still on the session default) — store INSTANCE count = shuffle
     partitions, per-instance open/commit is fixed cost, and per-user
-    session state at gate SFs sits below the 8↔32 crossover measured by
-    tools/exp_state_partitions_scale.py (x1: 8 stores 2.13 s vs 32
-    stores 2.66 s). Results are partition-invariant; a 100 TB deployment
+    session state at gate SFs sits below the 8↔32 crossover recorded in
+    PLANS.md "r14: state-partitions lever at scale" (x1: 8 stores 2.13 s
+    vs 32 stores 2.66 s). Results are partition-invariant; a 100 TB deployment
     sizes this to state volume instead."""
     import hashlib
 
@@ -5963,8 +5963,8 @@ def events_streaming_sessions_rocksdb(spark: SparkSession,
     finished query's stateOperators report rocksdb customMetrics, so a
     scope bug falls loudly instead of silently draining on heap. State
     partitions are sized to state volume (8 at gate SFs, per the
-    exp_state_partitions_scale crossover; a 100 TB deployment raises
-    this) and changelog checkpointing replaces full snapshot uploads.
+    crossover in PLANS.md "r14: state-partitions lever at scale"; a
+    100 TB deployment raises this) and changelog checkpointing replaces full snapshot uploads.
     Semantics are provider-independent (test_rocksdb_provider_parity
     pins the family), so the oracle is the sessions gate's horizon
     restatement unchanged."""

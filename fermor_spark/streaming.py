@@ -197,8 +197,8 @@ class scoped_confs:
     track state VOLUME (r14 measurement: a kilobyte-state drain at 32
     partitions pays 32 store cycles per microbatch; resizing to 8 cut
     the tumbling drain 3.0 s → 1.0-1.2 s, and the crossover where more
-    stores win arrives between 1x and 8x state in
-    tools/exp_state_partitions_scale.py)."""
+    stores win arrives between 1x and 8x state — PLANS.md, "r14:
+    state-partitions lever at scale")."""
 
     def __init__(self, spark: SparkSession, confs: dict):
         self.spark = spark

@@ -10,5 +10,8 @@ from fermor_spark import get_spark  # noqa: E402
 
 @pytest.fixture(scope="session")
 def spark():
-    s = get_spark(app_name="fermor-tests", shuffle_partitions=4, cpus="8")
+    # SPARK_GRAFT_CPUS (the tier-1 command exports nproc) wins over the
+    # local[8] default; an explicit cpus= argument would shadow it
+    s = get_spark(app_name="fermor-tests", shuffle_partitions=4,
+                  cpus=os.environ.get("SPARK_GRAFT_CPUS") or "8")
     yield s

@@ -117,6 +117,35 @@ def test_connected_components_chain_logarithmic_rounds(spark):
     assert hybrid == {(r["id"], r["comp"]) for r in rows}
 
 
+def test_round_telemetry_per_thread(spark):
+    """LAST_CC_ROUNDS is per thread: two threads running forced-distributed
+    CC at once each read the rounds of their own call, not those of
+    whichever call finished last."""
+    import threading
+    from concurrent.futures import ThreadPoolExecutor
+
+    ids = [f"v{i:03d}" for i in range(64)]
+    graphs = {"chain": edges_graph(spark, "l", list(zip(ids, ids[1:]))),
+              "pair": edges_graph(spark, "l", [("a", "b")])}
+    solo = {}
+    for name, g in graphs.items():
+        iterate.connected_components(g, local_edge_threshold=0)
+        solo[name] = iterate.LAST_CC_ROUNDS
+    assert solo["chain"] != solo["pair"], solo
+    both_done = threading.Barrier(2)
+
+    def run(name):
+        iterate.connected_components(graphs[name], local_edge_threshold=0)
+        both_done.wait(timeout=300)  # read only after both calls returned
+        return iterate.LAST_CC_ROUNDS
+
+    with ThreadPoolExecutor(max_workers=2) as ex:
+        seen = dict(zip(graphs, ex.map(run, graphs)))
+    assert seen == solo
+    # the main thread still reads its own most recent call
+    assert iterate.LAST_CC_ROUNDS == solo["pair"]
+
+
 def test_scc(spark):
     """G7 expected SCCs (graph/algo_test.clj:126-139): {{M C E}, {D G}}."""
     g = edges_graph(spark, "to", [

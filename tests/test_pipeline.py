@@ -2268,8 +2268,8 @@ def test_robots_and_domain_filter_join_fallback(spark):
     assert joined["http://A.EXAMPLE/private/x"] is False
     assert joined["http://a.example/private/pubx"] is True
     assert joined["notaurl"] is True   # null host allows
-    # the PER-CALL leg telemetry the forced bench gate reads (r13; the
-    # module-global LAST_ROBOTS_PATH races concurrent plan construction)
+    # the PER-CALL leg telemetry the forced bench gate reads (r13; a
+    # module global would race concurrent plan construction)
     assert robots_filter(urls, "url", robots,
                          max_broadcast_rows=1).robots_path == "join"
     assert robots_filter(urls, "url", robots).robots_path == "broadcast"

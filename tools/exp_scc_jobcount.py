@@ -1,4 +1,4 @@
-"""g_scc_distributed / g_kcore_distributed job-per-round audit
+"""Job-per-round audit of the forced-distributed iterative gates
 (VERDICT r17 #3/#4).
 
 Counts the Spark JOBS each forced-distributed iterative operator pays,
@@ -6,7 +6,7 @@ via setJobGroup + statusTracker (the UI is disabled in session.py, so
 no REST API). Prints total jobs, rounds (LAST_*_ROUNDS) and jobs/round;
 if trim or a convergence probe pays separable jobs, the total shows it.
 
-Run: python tools/exp_scc_jobcount.py [scc|kcore|cc|bf] [reps]
+Run: python tools/exp_scc_jobcount.py [scc|kcore|cc|bf|bfs|dedup] [reps]
 """
 from __future__ import annotations
 
@@ -18,6 +18,7 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from fermor_spark import datasets, iterate
+from fermor_spark.pipeline import dedup
 from fermor_spark.session import get_spark
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -44,7 +45,11 @@ def main() -> None:
                        lambda: iterate.LAST_KCORE_ROUNDS),
              "cc": ("g_cc_distributed", lambda: iterate.LAST_CC_ROUNDS),
              "bf": ("g_shortest_path_distributed",
-                    lambda: iterate.LAST_BF_ROUNDS)}
+                    lambda: iterate.LAST_BF_ROUNDS),
+             "bfs": ("g_reachable_distributed",
+                     lambda: iterate.LAST_BFS_ROUNDS),
+             "dedup": ("dedup_clusters_distributed",
+                       lambda: dedup.LAST_CLUSTER_ROUNDS)}
     gate, rounds_fn = GATES[which]
 
     def run():

@@ -1320,11 +1320,14 @@ def k_core(g: PropertyGraph, k: int, labels=None, max_iters: int = 500,
     to exact k-core — so the lever on deep-cascade graphs is per-round
     OVERHEAD: one job per round (the frontier is a trivial filter over the
     checkpointed degree table, recomputed lazily in both plan legs instead
-    of checkpointed itself), the round's row count doubling as the
-    convergence probe (count unchanged ⟺ frontier was empty ⟺ fixed
-    point). A lazily-persisted multi-level batch was tried and REJECTED:
-    AQE compiles the deep chained plan into far more shuffle stages than
-    the flat loop (see PLANS.md). Parallel edges count once per edge,
+    of checkpointed itself). The round's job also returns the convergence
+    probe: the survivor count and the size of the NEXT frontier (survivors
+    with deg < k). The loop stops when that frontier is empty, so the
+    round that reaches the fixed point is the last one; an unchanged
+    survivor count (the first round removed nothing) also stops it. A
+    lazily-persisted multi-level batch was tried and REJECTED: AQE
+    compiles the deep chained plan into far more shuffle stages than the
+    flat loop (see PLANS.md). Parallel edges count once per edge,
     self-loops are excluded (standard core-number convention).
     """
     rec = _record("kcore")
@@ -1391,8 +1394,9 @@ def k_core(g: PropertyGraph, k: int, labels=None, max_iters: int = 500,
             .select("id", (F.col("deg") - F.coalesce(F.col("_d"), F.lit(0))).alias("deg"))
         )
 
-    for deg, (m,) in _fixpoint(rec, deg, peel, max_iters):
-        if m == n:  # nothing removed → frontier was empty → fixed point
+    probe = (F.count(F.lit(1)), F.count(F.when(F.col("deg") < k, 1)))
+    for deg, (m, nxt) in _fixpoint(rec, deg, peel, max_iters, probe=probe):
+        if m == n or nxt == 0:  # nothing removed, or nothing left to peel
             break
         n = m
     return deg.select("id", "deg")

@@ -8,10 +8,15 @@ delimit text blocks, entities decode, whitespace collapses per block,
 and a block whose characters are mostly inside <a> tags (link density >
 ``max_link_density``) is boilerplate and dropped — the classic nav/
 footer screen. It does NOT render CSS, run JS, or rank DOM subtrees;
-real deployments can swap in trafilatura via the same mapInPandas seam.
+real deployments can swap in trafilatura behind ``extract_html``.
 
-Scale shape: one pandas-UDF pass per document, no shuffle — composes
-directly with read_warc (file-parallel) and the text.* curation family.
+Scale shape: no shuffle. ``html_to_text`` is the column form, one
+Arrow-batched pandas-UDF pass over any string/binary HTML column. On a
+crawl, ``warc.read_warc_html`` calls ``extract_html`` inside the WARC
+record walk's own mapInPandas pass instead, so WARC files become
+extracted rows in one Python pass per file rather than two (each
+Python-worker task has a fixed start-up cost). Both feed the text.*
+curation family.
 """
 
 from __future__ import annotations
@@ -31,6 +36,7 @@ _BLOCK_TAGS = {
 
 HTML_EXTRACT_SCHEMA = ("title string, text string, n_blocks int, "
                        "n_links int, lang string, noindex boolean")
+HTML_EXTRACT_COLS = tuple(f.split()[0] for f in HTML_EXTRACT_SCHEMA.split(","))
 
 
 class _Extractor(HTMLParser):
@@ -139,13 +145,11 @@ def html_to_text(df: DataFrame, col: str = "html",
             raw = v.decode("utf-8", "replace") if isinstance(
                 v, (bytes, bytearray)) else str(v)
             rows.append(extract_html(raw, max_link_density))
-        return pd.DataFrame(rows, columns=["title", "text", "n_blocks",
-                                           "n_links", "lang", "noindex"])
+        return pd.DataFrame(rows, columns=list(HTML_EXTRACT_COLS))
 
     udf = F.pandas_udf(run, HTML_EXTRACT_SCHEMA)
     ex = df.withColumn("_ex", udf(F.col(col)))
     return ex.select(
         *df.columns,
         *[F.col(f"_ex.{c}").alias(f"{prefix}{c}")
-          for c in ("title", "text", "n_blocks", "n_links",
-                    "lang", "noindex")])
+          for c in HTML_EXTRACT_COLS])

@@ -502,14 +502,20 @@ def semantic_dedup(
     cosine_pairs_exact (id-hash sub-blocks bound row size; one numpy
     matmul per in-cluster block pair inside mapInPandas; nothing on the
     driver). Component resolution reuses dedup_clusters (driver union-find
-    under its pair threshold, min-propagation rounds above it).
+    under its pair threshold, min-propagation rounds above it). The
+    centroid assignment runs once per call: it is lazily checkpointed, so
+    the block grid and the final join read one materialization.
     """
     import math
 
     import numpy as np
     import pandas as pd
 
-    assign = semantic_assign(df, k, id_col, vec_col)  # (id, cluster)
+    # (id, cluster), checkpointed lazily: the pair grid and the final
+    # join both read it, and each uncheckpointed read re-ran the
+    # centroid matmul's Python tasks; the first job now materializes it
+    assign = semantic_assign(df, k, id_col, vec_col).localCheckpoint(
+        eager=False)
     base = (
         df.select(
             F.col(id_col).alias("id"),

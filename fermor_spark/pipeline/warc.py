@@ -9,11 +9,14 @@ task's input — the real-world unit of crawl parallelism (Common Crawl
 ships ~1 GB files; a 100 TB crawl is ~100k files riding one file-listing
 scan). Record splitting, gzip member decompression, and HTTP header
 stripping are all partition-local inside one mapInPandas pass — zero
-shuffle between "bytes on disk" and "payload rows". The writer side
-(``warc_bytes`` / ``write_warc``) emits valid WARC/1.0 — warcinfo +
-response records, per-record gzip members (the Common Crawl convention,
-readable by any WARC tool) — so round trips are value-checkable against
-the source table without network access.
+shuffle between "bytes on disk" and "payload rows". ``read_warc_html``
+runs HTML extraction (``html.extract_html``) inside that same pass, so a
+crawl's "bytes on disk → extracted text rows" front half is one Python
+node, not a record walk followed by a separate extraction UDF. The
+writer side (``warc_bytes`` / ``write_warc``) emits valid WARC/1.0 —
+warcinfo + response records, per-record gzip members (the Common Crawl
+convention, readable by any WARC tool) — so round trips are
+value-checkable against the source table without network access.
 
 Record grammar (WARC/1.0): a version line ``WARC/1.0\\r\\n``, named
 headers through a blank line, a Content-Length-sized block, then
@@ -30,6 +33,9 @@ from typing import Iterator
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from fermor_spark.pipeline.html import (HTML_EXTRACT_COLS,
+                                        HTML_EXTRACT_SCHEMA, extract_html)
 
 WARC_SCHEMA = (
     "warc_file string, record_type string, url string, warc_date string, "
@@ -187,6 +193,37 @@ def _parse_warc_stream(name: str, data: bytes):
         yield (name, rtype, url, date, status, ctype, payload)
 
 
+_WARC_COLS = ["warc_file", "record_type", "url", "warc_date",
+              "http_status", "content_type", "payload"]
+
+
+def _warc_mapper(record_types: tuple[str, ...],
+                 max_link_density: float | None = None, prefix: str = ""):
+    """The mapInPandas function of the binaryFile → record-row pass,
+    shared by the batch and streaming readers. With ``max_link_density``
+    set, each kept record's payload also goes through
+    ``html.extract_html`` in the same pass, appending the
+    ``{prefix}``-named extraction columns (read_warc_html)."""
+    cols = _WARC_COLS + ([prefix + c for c in HTML_EXTRACT_COLS]
+                         if max_link_density is not None else [])
+
+    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            # one output frame per FILE: the task never holds more than
+            # one file's records (plus one gzip member's raw bytes)
+            for name, content in zip(pdf["path"], pdf["content"]):
+                rows = [row for row in
+                        _iter_warc_records(str(name), bytes(content))
+                        if row[1] in record_types]
+                if max_link_density is not None:
+                    rows = [row + extract_html(
+                        row[6].decode("utf-8", "replace"), max_link_density)
+                        for row in rows]
+                yield pd.DataFrame(rows, columns=cols)
+
+    return run
+
+
 def read_warc(spark: SparkSession, path: str,
               record_types: tuple[str, ...] = ("response",),
               glob: str = "*.warc*") -> DataFrame:
@@ -202,20 +239,30 @@ def read_warc(spark: SparkSession, path: str,
     files = spark.read.format("binaryFile") \
         .option("pathGlobFilter", glob).load(path) \
         .select("path", "content")
+    return files.mapInPandas(_warc_mapper(record_types), WARC_SCHEMA)
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = ["warc_file", "record_type", "url", "warc_date",
-                "http_status", "content_type", "payload"]
-        for pdf in batches:
-            # one output frame per FILE: the task never holds more than
-            # one file's records (plus one gzip member's raw bytes)
-            for name, content in zip(pdf["path"], pdf["content"]):
-                rows = [row for row in
-                        _iter_warc_records(str(name), bytes(content))
-                        if row[1] in record_types]
-                yield pd.DataFrame(rows, columns=cols)
 
-    return files.mapInPandas(run, WARC_SCHEMA)
+def read_warc_html(spark: SparkSession, path: str,
+                   record_types: tuple[str, ...] = ("response",),
+                   glob: str = "*.warc*", max_link_density: float = 0.5,
+                   prefix: str = "extracted_") -> DataFrame:
+    """read_warc and html_to_text in ONE pass: the rows and columns of
+    ``html_to_text(read_warc(spark, path, record_types, glob),
+    col="payload", max_link_density=max_link_density, prefix=prefix)``.
+
+    Same binaryFile scan, and the record walk's mapInPandas runs
+    ``html.extract_html`` on each payload as it yields the record, so
+    the plan has one Python node instead of a mapInPandas followed by an
+    ArrowEvalPython. Each Python-worker task carries a fixed start-up
+    cost, so fusing the two saves one task per file partition."""
+    files = spark.read.format("binaryFile") \
+        .option("pathGlobFilter", glob).load(path) \
+        .select("path", "content")
+    schema = WARC_SCHEMA + "".join(
+        f", `{prefix}{name}` {typ}"
+        for name, typ in (f.split() for f in HTML_EXTRACT_SCHEMA.split(",")))
+    return files.mapInPandas(
+        _warc_mapper(record_types, max_link_density, prefix), schema)
 
 
 def read_wet(spark: SparkSession, path: str,
@@ -324,16 +371,4 @@ def read_warc_stream(spark: SparkSession, path: str,
         reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
     files = reader.load(path).select("path", "content")
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = ["warc_file", "record_type", "url", "warc_date",
-                "http_status", "content_type", "payload"]
-        for pdf in batches:
-            # one output frame per FILE: the task never holds more than
-            # one file's records (plus one gzip member's raw bytes)
-            for name, content in zip(pdf["path"], pdf["content"]):
-                rows = [row for row in
-                        _iter_warc_records(str(name), bytes(content))
-                        if row[1] in record_types]
-                yield pd.DataFrame(rows, columns=cols)
-
-    return files.mapInPandas(run, WARC_SCHEMA)
+    return files.mapInPandas(_warc_mapper(record_types), WARC_SCHEMA)

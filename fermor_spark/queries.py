@@ -5101,8 +5101,9 @@ def pipeline_web_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     the r11 window): documents → synthetic HTML pages (entity-bearing
     title, script noise, link-dense nav/footer boilerplate, the doc text
     HTML-escaped into an <article>) → WARC/1.0 gzip files on disk →
-    read_warc (file-parallel record walk) → html_to_text (stdlib-parser
-    extraction, link-density boilerplate drop) → per-lang aggregates.
+    read_warc_html (file-parallel record walk with the stdlib-parser
+    extraction and link-density boilerplate drop in the same
+    mapInPandas pass) → per-lang aggregates.
 
     Every stage is load-bearing for the hash match: WARC must round-trip
     payload bytes; the extractor must decode entities (titles_ok compares
@@ -5114,8 +5115,7 @@ def pipeline_web_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     import shutil
     import tempfile
 
-    from fermor_spark.pipeline.html import html_to_text
-    from fermor_spark.pipeline.warc import read_warc, write_warc
+    from fermor_spark.pipeline.warc import read_warc_html, write_warc
 
     d = table(spark, sf_dir, "documents")
     esc = F.regexp_replace(
@@ -5135,7 +5135,7 @@ def pipeline_web_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.encode(page, "UTF-8").alias("payload"))
     tmp = tempfile.mkdtemp(prefix="fermor_web_gate_")
     write_warc(pages, f"{tmp}/crawl", n_files=8, compress=True)
-    ex = html_to_text(read_warc(spark, f"{tmp}/crawl"), col="payload")
+    ex = read_warc_html(spark, f"{tmp}/crawl")
     parts = F.split(F.col("url"), "/")
     agg = ex.select(
         F.element_at(parts, -2).alias("lang"),
@@ -5203,29 +5203,31 @@ def pipeline_crawl_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     - robots_filter must drop /private/ paths on the news host (the
       odd-numbered sources' doc_id%3==0 docs) — the oracle restates both
       gates as closed-form predicates on the source table;
-    - html_to_text must recover the article text exactly (the per-split
-      md5 text_checksum pins the bytes through WARC gzip + HTML escaping);
+    - the HTML extraction must recover the article text exactly (the
+      per-split md5 text_checksum pins the bytes through WARC gzip + HTML
+      escaping);
     - then the already-gated curate_v2 stages run on the RECOVERED corpus,
       so the oracle's funnel (repetition gate, hash-kernel classifier,
       SemDeDup closure, md5 split lattice) is computed on crawl output,
       not on the source table.
 
-    Scale shape: the URL dedup is one groupBy on norm_url (inherent to
-    exact URL dedup); both politeness gates are map-side (literal-array
-    blocklist, broadcast robots rules under the driver ceiling); the back
-    half's shapes are curate_v2's (left_semi stage joins, eager cache on
-    the filtered embedding set, cluster-confined quadratic work)."""
+    Scale shape: WARC read and HTML extraction are one mapInPandas pass
+    per file (read_warc_html); the URL dedup is one groupBy on norm_url
+    (inherent to exact URL dedup); both politeness gates are map-side
+    (literal-array blocklist, broadcast robots rules under the driver
+    ceiling); the back half's shapes are curate_v2's (left_semi stage
+    joins, eager cache on the filtered embedding set, cluster-confined
+    quadratic work)."""
     import shutil
     import tempfile
 
-    from fermor_spark.pipeline.html import html_to_text
     from fermor_spark.pipeline.sample import hash_split
     from fermor_spark.pipeline.similarity import semantic_dedup
     from fermor_spark.pipeline.text import classifier_score, \
         repetition_metrics
     from fermor_spark.pipeline.url import (domain_filter, robots_filter,
                                            url_host, url_normalize)
-    from fermor_spark.pipeline.warc import read_warc, write_warc
+    from fermor_spark.pipeline.warc import read_warc_html, write_warc
     from fermor_spark.session import managed_cache
 
     d = table(spark, sf_dir, "documents")
@@ -5260,7 +5262,7 @@ def pipeline_crawl_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     tmp = tempfile.mkdtemp(prefix="fermor_crawl_gate_")
     write_warc(pages, f"{tmp}/crawl", n_files=8, compress=True)
 
-    ex = html_to_text(read_warc(spark, f"{tmp}/crawl"), col="payload")
+    ex = read_warc_html(spark, f"{tmp}/crawl")
     nu = url_normalize(ex.select("url", "extracted_text"), "url")
     uniq = nu.groupBy("norm_url").agg(
         F.min_by("extracted_text", "url").alias("text"))

@@ -2,7 +2,8 @@
 
 Expected values in the tests come from the reference's committed test
 assertions (cited per test); comparison is multiset/set-based where the
-reference's own tests wrap results in `set`.
+reference's own tests wrap results in `set`. ``executed_plan_nodes``
+reads executed plans back from Spark's SQL status store.
 """
 
 from fermor_spark import PropertyGraph
@@ -87,3 +88,24 @@ def edge_flavours_graph(spark) -> PropertyGraph:
 
 def edges_graph(spark, label, pairs) -> PropertyGraph:
     return PropertyGraph.build(spark).add_edges(label, pairs).forked()
+
+
+def executed_plan_nodes(spark, action) -> dict:
+    """Run ``action()``; return ``{execution id: [(node name, node desc),
+    ...]}`` for each SQL execution it started, read from the SQL status
+    store (``executionsList`` / ``planGraph``, which work with the UI
+    off) after the listener bus has drained."""
+    sc = spark.sparkContext
+    conv = sc._jvm.scala.jdk.javaapi.CollectionConverters
+    store = spark._jsparkSession.sharedState().statusStore()
+
+    def ids():
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return {ex.executionId()
+                for ex in conv.asJava(store.executionsList())}
+
+    before = ids()
+    action()
+    return {eid: [(n.name(), n.desc())
+                  for n in conv.asJava(store.planGraph(eid).allNodes())]
+            for eid in sorted(ids() - before)}

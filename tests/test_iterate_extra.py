@@ -299,6 +299,28 @@ def test_k_core_triangle_with_chain(spark, thresh):
     assert got == {"a": 2, "b": 2, "c": 2}  # chain c-d-e peeled tail-first
 
 
+def test_k_core_distributed_stops_at_fixed_point(spark):
+    """The distributed peel stops in the round that reaches the fixed
+    point: each round's probe is (survivors, next frontier size), and an
+    empty next frontier ends the loop without a further, empty round."""
+    # triangle + tail c-d-e: e goes in round 1, d in round 2, and the
+    # triangle left has no vertex below k
+    g = edges_graph(
+        spark, "to",
+        [("a", "b"), ("b", "c"), ("c", "a"), ("c", "d"), ("d", "e")],
+    )
+    got = {r["id"]: r["deg"] for r in
+           iterate.k_core(g, k=2, local_edge_threshold=0).collect()}
+    assert got == {"a": 2, "b": 2, "c": 2}
+    assert iterate.LAST_KCORE_ROUNDS == 2
+    assert iterate.round_rows("kcore") == [(4, 1), (3, 0)]
+    # a 6-chain peels from both ends, two vertices a round, to nothing
+    chain = edges_graph(spark, "to", [(f"v{i}", f"v{i + 1}")
+                                      for i in range(5)])
+    assert iterate.k_core(chain, k=2, local_edge_threshold=0).count() == 0
+    assert iterate.round_rows("kcore") == [(4, 2), (2, 2), (0, 0)]
+
+
 @pytest.mark.parametrize("thresh", [200_000, 0])
 def test_k_core_empty_when_no_core(spark, thresh):
     # K4 minus one edge has no 3-core (cascading removal empties it)

@@ -1799,6 +1799,29 @@ def test_semantic_dedup_drops_near_dups_keeps_min_id(spark):
     assert got[2]["cluster"] == got[4]["cluster"] == 2
 
 
+def test_semantic_dedup_assigns_once(spark):
+    """One semantic_dedup call runs the centroid assignment once: exactly
+    one SQL execution's plan holds semantic_assign's MapInPandas (the
+    lazy checkpoint's), and every later job reads the checkpoint instead
+    of re-running the matmul's Python tasks."""
+    from fermor_spark.pipeline.similarity import semantic_dedup
+    from tests.fixtures import executed_plan_nodes
+
+    rows = [(i, [float(i % 3 == 0), float(i % 3 == 1), 1.0 + i % 5])
+            for i in range(1, 41)]
+    df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+    out = []
+    plans = executed_plan_nodes(
+        spark, lambda: out.extend(
+            semantic_dedup(df, threshold=0.99, k=3).collect()))
+    assert len(out) == 40 and 0 < sum(r["kept"] for r in out) < 40
+    assigning = [eid for eid, nodes in plans.items()
+                 if any(name.startswith("MapInPandas")
+                        and desc.split()[1].startswith("assign(")
+                        for name, desc in nodes)]
+    assert len(assigning) == 1, plans
+
+
 def test_classifier_score_decision_and_normalization(spark):
     """The integerized decision reproduces exactly: per-token weight =
     (md5-int(tok) % 4096 % 997) - 498, passes = sum > 0, score =
@@ -2102,6 +2125,59 @@ def test_html_to_text_spark_binary_and_null(spark):
     assert got[1]["extracted_text"] == "alpha beta"
     assert got[1]["extracted_title"] == "T1"
     assert got[2]["extracted_text"] is None
+
+
+def test_read_warc_html_matches_composition(spark, tmp_path):
+    """The fused reader equals html_to_text(read_warc(...), col="payload")
+    row for row and column for column: over a per-record-gzip file and a
+    plain one, with a conversion record (filtered out by the default
+    record_types), a payload that is not valid UTF-8, HTML the parser
+    rejects (the all-null extraction row), and a non-default prefix,
+    link-density bound and record_types."""
+    from fermor_spark.pipeline.html import html_to_text
+    from fermor_spark.pipeline.warc import (read_warc, read_warc_html,
+                                            warc_bytes)
+
+    nav = ('<p><a href="/a">seventy percent links</a> and prose</p>'
+           '<p>kept body</p>')
+    recs = [
+        {"url": "http://w/ok", "payload":
+            b'<html lang="en"><title>T &amp; U</title><p>alpha beta</p></html>'},
+        {"url": "http://w/nav", "payload": nav.encode()},
+        {"url": "http://w/bad-utf8", "payload": b"<p>bad \xff\xfe bytes</p>"},
+        {"url": "http://w/malformed", "payload": b"<![ foo ]>"},
+        {"url": "http://w/empty", "payload": b""},
+        {"url": "http://w/conv", "type": "conversion",
+         "payload": b"<p>extracted text</p>"},
+    ]
+    (tmp_path / "a.warc.gz").write_bytes(warc_bytes(recs[:3], compress=True))
+    (tmp_path / "b.warc").write_bytes(warc_bytes(recs[3:], compress=False))
+    path = str(tmp_path)
+
+    def rows(df):
+        return sorted((tuple(r) for r in df.collect()),
+                      key=lambda r: (r[0], r[2]))
+
+    for kw in ({}, {"record_types": ("response", "conversion"),
+                    "max_link_density": 0.9, "prefix": "x_"}):
+        reader_kw = {k: v for k, v in kw.items() if k == "record_types"}
+        extract_kw = {k: v for k, v in kw.items() if k != "record_types"}
+        fused = read_warc_html(spark, path, **kw)
+        composed = html_to_text(read_warc(spark, path, **reader_kw),
+                                col="payload", **extract_kw)
+        assert fused.schema == composed.schema, kw
+        got = rows(fused)
+        assert got == rows(composed), kw
+        by_url = {r[2]: r for r in got}
+        assert ("http://w/conv" in by_url) == bool(kw), kw
+        assert by_url["http://w/malformed"][7:] == (None,) * 6
+        assert "\ufffd" in by_url["http://w/bad-utf8"][8]
+        assert by_url["http://w/ok"][7:] == ("T & U", "alpha beta", 1, 0,
+                                              "en", False)
+        # the link-density bound reaches the extractor: 0.5 drops the
+        # link-heavy block, 0.9 keeps it
+        assert by_url["http://w/nav"][8].startswith(
+            "seventy" if kw else "kept body")
 
 
 def test_url_normalize_semantics(spark):

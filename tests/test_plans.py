@@ -341,6 +341,35 @@ def test_url_canonicalization_is_scan_stage_only(spark, registry):
     assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan
 
 
+def test_read_warc_html_one_python_node(spark, tmp_path):
+    """The fused WARC reader runs record walk and HTML extraction in one
+    Python node: its executed plan has exactly one (a MapInPandas) and no
+    ArrowEvalPython, where html_to_text(read_warc(...)) has two. Each
+    Python node costs a worker task per partition."""
+    from fermor_spark.pipeline.html import html_to_text
+    from fermor_spark.pipeline.warc import (read_warc, read_warc_html,
+                                            warc_bytes)
+    from tests.fixtures import executed_plan_nodes
+
+    python_nodes = ("MapInPandas", "FlatMapGroupsInPandas",
+                    "ArrowEvalPython", "BatchEvalPython", "MapInArrow",
+                    "PythonMapInArrow")
+    (tmp_path / "a.warc.gz").write_bytes(warc_bytes(
+        [{"url": f"http://w/{i}", "payload": b"<p>x</p>"} for i in range(3)]))
+
+    def python_names(df):
+        plans = executed_plan_nodes(spark, df.collect)
+        return [name for nodes in plans.values() for name, _ in nodes
+                if name.startswith(python_nodes)]
+
+    fused = python_names(read_warc_html(spark, str(tmp_path)))
+    assert len(fused) == 1 and fused[0].startswith("MapInPandas"), fused
+    composed = python_names(html_to_text(read_warc(spark, str(tmp_path)),
+                                         col="payload"))
+    assert len(composed) == 2 and any(
+        n.startswith("ArrowEvalPython") for n in composed), composed
+
+
 def test_banding_plans_are_union_free(spark, registry):
     """r13 pin on the banding recompute trap (fixed 4× across rounds:
     lsh_candidates r12, incremental minhash c420cbe, simhash + minhash_lsh

@@ -23,7 +23,8 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from pyspark.sql import functions as F
 
 from fermor_spark.datasets import table
-from fermor_spark.session import get_spark, managed_cache, release_caches
+from fermor_spark.session import (get_spark, local_frame, managed_cache,
+                                  release_caches)
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
@@ -117,13 +118,12 @@ def profile_crawl(spark) -> list:
     import shutil
     import tempfile
 
-    from fermor_spark.pipeline.html import html_to_text
     from fermor_spark.pipeline.sample import hash_split
     from fermor_spark.pipeline.similarity import semantic_dedup
     from fermor_spark.pipeline.text import classifier_score, repetition_metrics
     from fermor_spark.pipeline.url import (domain_filter, robots_filter,
                                            url_host, url_normalize)
-    from fermor_spark.pipeline.warc import read_warc, write_warc
+    from fermor_spark.pipeline.warc import read_warc_html, write_warc
 
     st = Stages()
     d = table(spark, SF_DIR, "documents")
@@ -159,7 +159,7 @@ def profile_crawl(spark) -> list:
     write_warc(pages, f"{tmp}/crawl", n_files=8, compress=True)
     st.mark("warc_fixture_write")
 
-    ex = html_to_text(read_warc(spark, f"{tmp}/crawl"), col="payload")
+    ex = read_warc_html(spark, f"{tmp}/crawl")
     nu = url_normalize(ex.select("url", "extracted_text"), "url")
     uniq = nu.groupBy("norm_url").agg(
         F.min_by("extracted_text", "url").alias("text"))
@@ -167,8 +167,8 @@ def profile_crawl(spark) -> list:
         domain_filter(url_host(uniq, "norm_url"), "host",
                       ["ads.example.com"]),
         "norm_url",
-        spark.createDataFrame(
-            [("news.example.org", "User-agent: *\nDisallow: /private/")],
+        local_frame(
+            spark, [("news.example.org", "User-agent: *\nDisallow: /private/")],
             "host string, robots_txt string"))
     docs = polite.where(F.col("kept") & F.col("robots_ok")).select(
         F.element_at(F.split("norm_url", "/"), -1).cast("long")

@@ -138,7 +138,7 @@ BENCH_QUERIES = [
     "multimodal_arith_jpeg",
     # late-r10 additions: Bloom membership (JVM-side hashing + vectorized
     # bitmap partials), the composed web-ingest front half
-    # (documents -> HTML -> WARC gzip -> read_warc -> html_to_text),
+    # (documents -> HTML -> WARC gzip -> read_warc_html),
     # and the Bloom-screened incremental snapshot-vs-corpus dedup
     "sketch_bloom_membership",
     "pipeline_web_e2e",
@@ -150,10 +150,9 @@ BENCH_QUERIES = [
     # domain/robots gates chained into curate_v2's quality/classifier/
     # SemDeDup/split back half, payload bytes end to end under one plan
     "pipeline_crawl_e2e",
-    # r12 addition (VERDICT r11 #6): the robots gate's join-fallback leg
-    # FORCED, against a per-document padded robots table — measures the
-    # above-the-ceiling distributed parse + shuffle join, not its plan
-    # shape alone
+    # r12 addition (VERDICT r11 #6): the robots gate against a
+    # per-document padded robots table — measures the host dedup + join
+    # over a full-crawl-shaped robots table, not a 2-row toy
     "pipeline_robots_forced_join",
     # r12 addition: the semantic member of the incremental-dedup trio
     # (hyperplane-LSH bucket join + exact-cosine verify, snapshot vs

@@ -482,7 +482,11 @@ def all_cycles(
 # "window partitioned by the same key as a preceding aggregation does
 # not need a second shuffle"; here the aggregation IS the window).
 def _large_star(e: DataFrame) -> DataFrame:
-    # symmetric view so Γ(u) sees both orientations
+    # symmetric view so Γ(u) sees both orientations.
+    # Skew limit: the min window over partitionBy("u") is one exchange
+    # that AQE's skew split does not touch (it splits join partitions,
+    # not window partitions). Component minima become high-degree u keys,
+    # so a giant component funnels its rows into one task.
     sym = e.unionByName(e.select(F.col("v").alias("u"), F.col("u").alias("v")))
     return (
         sym.withColumn("m", F.least(F.min("v").over(Window.partitionBy("u")), F.col("u")))

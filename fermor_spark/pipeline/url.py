@@ -3,11 +3,12 @@ between ingest and dedup — "same page, different URL string" collapses
 (tracking params, default ports, case-variant hosts, sloppy slashes)
 and blocklisted domains drop before any expensive text work.
 
-Everything here is pure JVM column expressions — parse_url,
-higher-order array functions, regexp — inside whole-stage codegen. No
-Python executes per row, so these run at scan speed on 100 TB and
-normalization composes with exact dedup as a plain groupBy on the
-normalized column.
+Normalization and domain filtering are pure JVM column expressions and
+joins — parse_url, higher-order array functions, regexp — inside
+whole-stage codegen. No Python executes per row, so they run at scan
+speed on 100 TB and normalization composes with exact dedup as a plain
+groupBy on the normalized column. The robots.txt gate's rule walk is
+the one Python pass (a pandas UDF above its host join).
 """
 
 from __future__ import annotations
@@ -17,32 +18,6 @@ from pyspark.sql import functions as F
 
 # query parameters that identify a click, not a page (C4/CC-style screen)
 TRACKING_PARAMS = r"^(utm_[^=]*|fbclid|gclid|msclkid|ref|mc_eid)(=|$)"
-
-# Driver-broadcast ceiling for blocklist/robots artifacts. A UT1-class
-# blocklist (~4M short domains) and a polite crawl's robots cache both fit
-# comfortably; a 100 TB crawl's full robots table (tens of millions of
-# hosts × multi-KB robots.txt) does NOT — collecting it would materialize
-# gigabytes on the driver. Above the ceiling the operators switch to an
-# equivalent join plan (shuffle-on-host instead of driver ingress).
-_BROADCAST_MAX_BYTES = 64 << 20
-_BROADCAST_MAX_ROWS = 2_000_000
-
-
-def _driver_sized(df: DataFrame, max_rows: int | None = None) -> bool:
-    """True when ``df`` is safe to collect+broadcast. By default Catalyst's
-    size estimate decides when it is known; in-memory frames report
-    unknown (huge) stats, so those fall back to a bounded limit-count
-    probe — reading at most max_rows+1 rows, never the whole table. An
-    EXPLICIT max_rows forces the row probe (deterministic for tests and
-    for callers that know their row budget)."""
-    from fermor_spark.session import estimated_plan_bytes
-
-    if max_rows is None:
-        est = estimated_plan_bytes(df)
-        if est < (1 << 61):
-            return est <= _BROADCAST_MAX_BYTES
-        max_rows = _BROADCAST_MAX_ROWS
-    return df.limit(max_rows + 1).count() <= max_rows
 
 
 def _part(col: Column, what: str) -> Column:
@@ -109,25 +84,17 @@ def _suffixes(host: Column) -> Column:
 
 
 def domain_filter(df: DataFrame, host_col: str, blocked,
-                  out_col: str = "kept",
-                  max_broadcast_rows: int | None = None) -> DataFrame:
+                  out_col: str = "kept") -> DataFrame:
     """Append a boolean: False when the host equals a blocked domain or
     sits under one (suffix match on label boundaries).
 
     ``blocked`` is a Python list/tuple (→ a literal array +
     arrays_overlap, zero joins, whole-stage codegen — the common
     bounded-blocklist case) or a DataFrame with a ``domain`` column.
-    A DataFrame blocklist under the driver ceiling (UT1-class) collects
-    ONCE, rides a SparkContext broadcast as a Python set, and each Arrow
-    batch suffix-tests against it map-side — the 100 TB side never
-    shuffles and never joins. ABOVE the ceiling (_driver_sized guards
-    the collect) the same answer comes from joins: the DISTINCT host
-    set explodes its suffixes against the blocklist, and the resulting
-    blocked-host set joins back (AQE broadcasts it when it fits).
-    ``max_broadcast_rows`` overrides the row ceiling (tests force the
-    join path with it)."""
-    import pandas as pd
-
+    A DataFrame blocklist matches by joins, all in the JVM: the DISTINCT
+    host set explodes its suffixes against the blocklist, and the
+    resulting blocked-host set joins back. The planner picks each join's
+    strategy from statistics (a UT1-class blocklist broadcasts)."""
     host = F.lower(F.col(host_col))
     if isinstance(blocked, (list, tuple)):
         lit = F.array(*[F.lit(str(b).lower()) for b in blocked])
@@ -135,28 +102,8 @@ def domain_filter(df: DataFrame, host_col: str, blocked,
             out_col,
             F.coalesce(~F.arrays_overlap(_suffixes(host), lit),
                        F.lit(True)))   # null host can't match a blocklist
-    if _driver_sized(blocked, max_broadcast_rows):
-        dom = [r["domain"].lower() for r in
-               blocked.select("domain").distinct().collect()]
-        bc = df.sparkSession.sparkContext.broadcast(frozenset(dom))
-
-        def _test(s):
-            bl = bc.value
-            out = []
-            for h in s:
-                if h is None:
-                    out.append(True)
-                    continue
-                parts = h.lower().split(".")
-                out.append(not any(".".join(parts[i:]) in bl
-                                   for i in range(max(1, len(parts) - 1))))
-            return pd.Series(out)
-
-        kept = F.pandas_udf(_test, "boolean")
-        return df.withColumn(out_col, kept(host))
-    # join fallback: same verdicts, shuffle-on-host instead of driver
-    # ingress. Hosts dedup first (a crawl repeats hosts heavily), so the
-    # explode touches |distinct hosts| × labels rows, not |df|.
+    # Hosts dedup first (a crawl repeats hosts heavily), so the explode
+    # touches |distinct hosts| × labels rows, not |df|.
     hosts = (df.select(host.alias("_h"))
              .where(F.col("_h").isNotNull()).distinct())
     blocked_hosts = (
@@ -321,87 +268,33 @@ def robots_allowed(path: str, rules: list[tuple[bool, str]]) -> bool:
 
 
 def robots_filter(df: DataFrame, url_col: str, robots_df: DataFrame,
-                  agent: str = "*", out_col: str = "robots_ok",
-                  max_broadcast_rows: int | None = None) -> DataFrame:
+                  agent: str = "*", out_col: str = "robots_ok") -> DataFrame:
     """Append the per-URL robots verdict. ``robots_df`` holds (host,
-    robots_txt) — one fetched robots.txt per host.
+    robots_txt) — one fetched robots.txt per host (a repeated host keeps
+    one of its rows).
 
-    Under the driver ceiling (_driver_sized guards the collect — a
-    polite crawl's robots cache) rules parse ONCE on the driver, ride a
-    SparkContext broadcast, and each Arrow batch evaluates map-side
-    (host → rules lookup + longest-match walk) — the 100 TB side never
-    shuffles. ABOVE the ceiling (a full-crawl robots table of tens of
-    millions of hosts would materialize gigabytes on the driver) the
-    rules parse DISTRIBUTED into a (host, rules) table and join on
-    host — same verdicts, shuffle-on-host instead of driver ingress.
-    Hosts with no robots.txt allow everything either way.
-    ``max_broadcast_rows`` overrides the ceiling (tests force the join
-    path with it).
-
-    The returned DataFrame carries ``robots_path`` ("broadcast"|"join")
-    — per-call leg telemetry, safe under concurrent plan construction.
-    It is a plain Python attribute, NOT plan metadata: read
-    it on the returned object BEFORE any further transformation (every
-    .select/.where returns a fresh DataFrame without it)."""
+    The robots table joins on lowercased host, and one pandas UDF maps
+    (path, robots_txt) to the verdict, parsing each distinct robots.txt
+    once per Arrow batch. The planner picks the join's strategy from
+    the robots table's statistics: a polite crawl's robots cache
+    broadcasts, a full-crawl table of tens of millions of hosts shuffles
+    on host. The verdict reads a column of the join, so it stays above
+    the join: a URL dedup before the gate runs before the verdict too.
+    Null hosts and hosts with no robots.txt allow everything."""
     import pandas as pd
 
     u = F.col(url_col)
-    host = F.lower(_part(u, "HOST"))
-    path = F.coalesce(_part(u, "PATH"), F.lit("/"))
+    robots = (robots_df.select(F.lower(F.col("host")).alias("_rh"),
+                               F.col("robots_txt").alias("_rt"))
+              .dropDuplicates(["_rh"]))
+    joined = df.join(robots, F.lower(_part(u, "HOST")) == F.col("_rh"),
+                     "left")
 
-    if _driver_sized(robots_df, max_broadcast_rows):
-        fetched = robots_df.select(F.lower(F.col("host")).alias("h"),
-                                   F.col("robots_txt")).collect()
-        rules = {r["h"]: parse_robots(r["robots_txt"] or "", agent)
-                 for r in fetched}
-        bc = df.sparkSession.sparkContext.broadcast(rules)
+    def _verdict(paths, texts):
+        rules = {t: parse_robots(t, agent) for t in set(texts.dropna())}
+        return pd.Series([t is None or robots_allowed(p or "/", rules[t])
+                          for p, t in zip(paths, texts)])
 
-        def _verdict(hosts, paths):
-            table = bc.value
-            out = []
-            for h, p in zip(hosts, paths):
-                r = table.get(h) if h is not None else None
-                out.append(True if not r else robots_allowed(p or "/", r))
-            return pd.Series(out)
-
-        verdict = F.pandas_udf(_verdict, "boolean")
-        out = df.withColumn(out_col, verdict(host, path))
-        out.robots_path = "broadcast"
-        return out
-
-    # join fallback: parse every robots.txt where it lives (one Arrow
-    # pass, no shuffle), join the (host, rules) table on host. The rules
-    # arrays are small per host; only hosts that appear in df's partition
-    # keys move.
-    def _parse(batches):
-        for pdf in batches:
-            yield pd.DataFrame({
-                "h": pdf["host"].str.lower(),
-                "rules": [[{"allow": a, "pattern": p}
-                           for a, p in parse_robots(t or "", agent)]
-                          for t in pdf["robots_txt"]],
-            })
-
-    parsed = (robots_df.select("host", "robots_txt")
-              .mapInPandas(_parse,
-                           "h string, "
-                           "rules array<struct<allow:boolean,pattern:string>>")
-              .dropDuplicates(["h"]))
-    joined = df.withColumn("_rk", host).withColumn("_rp", path).join(
-        parsed, F.col("_rk") == F.col("h"), "left")
-
-    def _verdict_joined(paths, rules):
-        out = []
-        for p, r in zip(paths, rules):
-            if r is None or len(r) == 0:
-                out.append(True)
-            else:
-                out.append(robots_allowed(
-                    p or "/", [(x["allow"], x["pattern"]) for x in r]))
-        return pd.Series(out)
-
-    verdict = F.pandas_udf(_verdict_joined, "boolean")
-    out = joined.withColumn(out_col, verdict(F.col("_rp"), F.col("rules"))) \
-        .select(*df.columns, out_col)
-    out.robots_path = "join"
-    return out
+    verdict = F.pandas_udf(_verdict, "boolean")
+    return joined.select(*df.columns,
+                         verdict(_part(u, "PATH"), "_rt").alias(out_col))

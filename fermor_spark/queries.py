@@ -4868,9 +4868,9 @@ def pipeline_robots_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     longest-match precedence (the Allow carve-out MUST beat the shorter
     Disallow), wildcard matching, percent-encoding equivalence (RFC 9309
     §2.2.2 — the encoded Disallow only bites if %69 compares equal to
-    'i'; r11), and the no-robots default are all load-bearing. Rules
-    parse once on the driver and ride a broadcast; evaluation is
-    map-side (pipeline.url.robots_filter)."""
+    'i'; r11), and the no-robots default are all load-bearing. The
+    two-row robots table joins on host (the planner broadcasts it) and
+    one pandas UDF walks the rules (pipeline.url.robots_filter)."""
     from fermor_spark.pipeline.url import robots_filter
 
     d = table(spark, sf_dir, "documents").where(F.col("doc_id") % 17 == 0)
@@ -4919,18 +4919,14 @@ def pipeline_robots_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def pipeline_robots_forced_join(spark: SparkSession, sf_dir: str
                                 ) -> DataFrame:
-    """The robots gate's JOIN-FALLBACK leg, FORCED (r12; VERDICT r11 #6
-    — the g_*_distributed precedent): same URLs and same closed-form
-    verdicts as pipeline_robots_filter, but max_broadcast_rows=0 pushes
-    robots_filter onto its above-the-ceiling path — rules parse
-    DISTRIBUTED into a (host, rules) table and join on host, no driver
-    ingress — and the robots table is padded with one never-matching
-    host per document (host-{doc_id}.pad.example with a real Disallow
-    body) so the fallback pays a full-crawl-shaped distributed parse +
-    dedup + shuffle join, not a 2-row toy. The pad hosts never appear
-    in any URL, so the oracle is unchanged; the gate asserts the leg it
-    paid for actually planned (the per-call robots_path attribute)."""
-    from fermor_spark.pipeline import url as _url
+    """The robots gate against a PER-DOCUMENT robots table (r12;
+    VERDICT r11 #6): same URLs and same closed-form verdicts as
+    pipeline_robots_filter, but the robots table is padded with one
+    never-matching host per document (host-{doc_id}.pad.example with a
+    real Disallow body), so robots_filter pays a full-crawl-shaped
+    host dedup + join over a parquet-sized robots table, not a 2-row
+    toy. The pad hosts never appear in any URL, so the oracle is
+    unchanged."""
     from fermor_spark.pipeline.url import robots_filter
 
     d = table(spark, sf_dir, "documents").where(F.col("doc_id") % 17 == 0)
@@ -4960,13 +4956,7 @@ def pipeline_robots_forced_join(spark: SparkSession, sf_dir: str
                  F.lit(".pad.example")).alias("host"),
         F.lit("User-agent: *\nDisallow: /tmp/\nAllow: /tmp/pub*")
         .alias("robots_txt"))
-    out = robots_filter(urls, "url", real.unionByName(pad),
-                        max_broadcast_rows=0)
-    # per-call leg telemetry (ADVICE r12): a module global would be
-    # last-call-wins and race concurrent plan construction; RuntimeError,
-    # not assert — python -O strips asserts
-    if getattr(out, "robots_path", None) != "join":
-        raise RuntimeError("forced robots join leg did not run")
+    out = robots_filter(urls, "url", real.unionByName(pad))
     return out.select(
         "doc_id",
         F.when(F.col("source") == "src0", "ads.example.com")
@@ -5213,9 +5203,10 @@ def pipeline_crawl_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: WARC read and HTML extraction are one mapInPandas pass
     per file (read_warc_html); the URL dedup is one groupBy on norm_url
-    (inherent to exact URL dedup); both politeness gates are map-side
-    (literal-array blocklist, broadcast robots rules under the driver
-    ceiling); the back half's shapes are curate_v2's (left_semi stage
+    (inherent to exact URL dedup); the blocklist gate is a map-side
+    literal array, and the robots gate joins its one-row table on host
+    (broadcast by the planner), with its rule walk above the URL dedup;
+    the back half's shapes are curate_v2's (left_semi stage
     joins, eager cache on the filtered embedding set, cluster-confined
     quadratic work)."""
     import shutil

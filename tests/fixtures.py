@@ -3,7 +3,8 @@
 Expected values in the tests come from the reference's committed test
 assertions (cited per test); comparison is multiset/set-based where the
 reference's own tests wrap results in `set`. ``executed_plan_nodes``
-reads executed plans back from Spark's SQL status store.
+and ``plan_node_metrics`` read executed plans and their SQL metrics
+back from Spark's SQL status store.
 """
 
 from fermor_spark import PropertyGraph
@@ -109,3 +110,14 @@ def executed_plan_nodes(spark, action) -> dict:
     return {eid: [(n.name(), n.desc())
                   for n in conv.asJava(store.planGraph(eid).allNodes())]
             for eid in sorted(ids() - before)}
+
+
+def plan_node_metrics(spark, execution_id) -> list:
+    """``{metric name: value}`` for each node of one SQL execution's plan,
+    in the order ``executed_plan_nodes`` lists the nodes."""
+    conv = spark.sparkContext._jvm.scala.jdk.javaapi.CollectionConverters
+    store = spark._jsparkSession.sharedState().statusStore()
+    values = conv.asJava(store.executionMetrics(execution_id))
+    return [{m.name(): values.get(m.accumulatorId())
+             for m in conv.asJava(n.metrics())}
+            for n in conv.asJava(store.planGraph(execution_id).allNodes())]

@@ -2184,8 +2184,8 @@ def test_url_normalize_semantics(spark):
     """Canonicalization unit contract: case, default ports, slash
     cleanup, tracking-param removal with order preserved, fragment drop,
     empty-query drop, malformed -> null; both blocklist paths (literal
-    arrays_overlap and broadcast-set UDF) agree including suffix matches
-    and null hosts."""
+    arrays_overlap and suffix-explode join) agree including suffix
+    matches and null hosts."""
     from fermor_spark.pipeline.url import (domain_filter, url_host,
                                            url_normalize)
 
@@ -2291,8 +2291,8 @@ def test_robots_percent_encoding_equivalence():
 
 
 def test_robots_filter_spark(spark):
-    """robots_filter: per-host rules broadcast once, URLs evaluated
-    map-side; hosts without a fetched robots.txt allow everything."""
+    """robots_filter: per-host rules join on host, URLs evaluated per
+    row; hosts without a fetched robots.txt allow everything."""
     from fermor_spark.pipeline.url import robots_filter
 
     robots = spark.createDataFrame([
@@ -2313,15 +2313,17 @@ def test_robots_filter_spark(spark):
     }
 
 
-def test_robots_and_domain_filter_join_fallback(spark):
-    """Above the broadcast ceiling the operators must NOT collect the
-    artifact to the driver: robots rules parse distributed into a
-    (host, rules) table joined on host, and a DataFrame blocklist
-    matches via a suffix-explode join — SAME verdicts as the broadcast
-    path on the identical fixture (max_broadcast_rows=1 forces the
-    fallback; the >threshold table is synthetic padding rows)."""
-    from fermor_spark.pipeline.url import (domain_filter, robots_filter,
+def test_robots_and_domain_filter_vs_reference(spark):
+    """robots_filter matches parse_robots + robots_allowed per URL on a
+    42-host robots table (hosts without robots.txt, a null host and an
+    unparsable URL allow), and a DataFrame blocklist matches the literal
+    list path, with no Python node in its plan."""
+    from urllib.parse import urlsplit
+
+    from fermor_spark.pipeline.url import (domain_filter, parse_robots,
+                                           robots_allowed, robots_filter,
                                            url_host)
+    from tests.fixtures import executed_plan_nodes
 
     robots_rows = [
         ("a.example", "User-agent: *\nDisallow: /private/\nAllow: /private/pub"),
@@ -2329,26 +2331,24 @@ def test_robots_and_domain_filter_join_fallback(spark):
     ] + [(f"pad{i}.example", "User-agent: *\nAllow: /") for i in range(40)]
     robots = spark.createDataFrame(robots_rows,
                                    "host string, robots_txt string")
-    urls = spark.createDataFrame([
-        ("http://a.example/ok",), ("http://A.EXAMPLE/private/x",),
-        ("http://a.example/private/pubx",),
-        ("https://b.example/anything",), ("http://c.example/no-robots",),
-        ("notaurl",),
-    ], "url string")
-    broadcast = {r["url"]: r["robots_ok"]
-                 for r in robots_filter(urls, "url", robots).collect()}
-    joined = {r["url"]: r["robots_ok"]
-              for r in robots_filter(urls, "url", robots,
-                                     max_broadcast_rows=1).collect()}
-    assert joined == broadcast
-    assert joined["http://A.EXAMPLE/private/x"] is False
-    assert joined["http://a.example/private/pubx"] is True
-    assert joined["notaurl"] is True   # null host allows
-    # the PER-CALL leg telemetry the forced bench gate reads (r13; a
-    # module global would race concurrent plan construction)
-    assert robots_filter(urls, "url", robots,
-                         max_broadcast_rows=1).robots_path == "join"
-    assert robots_filter(urls, "url", robots).robots_path == "broadcast"
+    url_list = ["http://a.example/ok", "http://A.EXAMPLE/private/x",
+                "http://a.example/private/pubx", "https://b.example/anything",
+                "http://c.example/no-robots", "http://pad3.example/x",
+                "notaurl", None]
+    urls = spark.createDataFrame([(u,) for u in url_list], "url string")
+    texts = dict(robots_rows)
+
+    def ref(url):
+        parts = urlsplit(url or "")
+        return robots_allowed(parts.path or "/",
+                              parse_robots(texts.get(parts.hostname, "")))
+
+    got = {r["url"]: r["robots_ok"]
+           for r in robots_filter(urls, "url", robots).collect()}
+    assert got == {u: ref(u) for u in url_list}
+    assert got["http://A.EXAMPLE/private/x"] is False
+    assert got["http://a.example/private/pubx"] is True
+    assert got["notaurl"] is True and got[None] is True   # null host allows
 
     bl_rows = [("ads.example.com",)] + [(f"pad{i}.example",)
                                         for i in range(40)]
@@ -2357,22 +2357,66 @@ def test_robots_and_domain_filter_join_fallback(spark):
         ("http://Sub.ADS.example.com/p",), ("http://notads.example.com/",),
         ("http://ads.example.com/",), ("notaurl",),
     ], "url string"), "url")
-    b_path = {r["url"]: r["kept"]
-              for r in domain_filter(hosts, "host", bl).collect()}
-    j_path = {r["url"]: r["kept"]
-              for r in domain_filter(hosts, "host", bl,
-                                     max_broadcast_rows=1).collect()}
-    assert j_path == b_path
+    frame = domain_filter(hosts, "host", bl)
+    got = []
+    plans = executed_plan_nodes(spark, lambda: got.extend(frame.collect()))
+    j_path = {r["url"]: r["kept"] for r in got}
+    assert j_path == {r["url"]: r["kept"] for r in domain_filter(
+        hosts, "host", [d for (d,) in bl_rows]).collect()}
     assert j_path["http://Sub.ADS.example.com/p"] is False
     assert j_path["http://notads.example.com/"] is True
     assert j_path["notaurl"] is True
+    assert not [name for nodes in plans.values() for name, _ in nodes
+                if "Python" in name or "InPandas" in name], plans
 
 
-def test_domain_filter_three_paths_vs_reference(spark):
-    """All THREE domain_filter execution paths — literal arrays_overlap,
-    broadcast-set UDF, suffix-explode join fallback — agree with a
-    pure-Python reference on 200 seeded random hosts (varied depth,
-    case, exact/suffix/miss relations to a 30-domain blocklist, nulls)."""
+def test_robots_verdict_runs_above_url_dedup(spark):
+    """On a crawl-shaped frame (each URL crawled in two spellings,
+    normalized, deduplicated by a groupBy on norm_url, then gated on the
+    verdict) the robots verdict's Python node sits above the dedup
+    aggregate and evaluates one row per distinct URL, not one per
+    crawled copy: the planner cannot push the caller's filter on the
+    verdict below the dedup into the read stage."""
+    from fermor_spark.pipeline.url import robots_filter, url_normalize
+    from tests.fixtures import executed_plan_nodes, plan_node_metrics
+
+    rows = []
+    for i in range(12):
+        path = f"/private/{i}" if i % 3 == 0 else f"/d/{i}"
+        rows.append((f"http://news.example.org{path}", f"t{i}"))
+        rows.append((f"HTTP://NEWS.EXAMPLE.ORG:80{path.replace('/', '//')}"
+                     "/?utm_source=x#frag", f"t{i}"))
+    crawl = spark.createDataFrame(rows, "url string, text string")
+    uniq = url_normalize(crawl, "url").groupBy("norm_url").agg(
+        F.min_by("text", "url").alias("text"))
+    robots = spark.createDataFrame(
+        [("news.example.org", "User-agent: *\nDisallow: /private/")],
+        "host string, robots_txt string")
+    polite = robots_filter(uniq, "norm_url", robots).where(
+        "robots_ok").select("norm_url", "text")
+    got = []
+    plans = executed_plan_nodes(spark, lambda: got.extend(polite.collect()))
+    assert len(got) == 8
+    verdicts = []
+    for eid, nodes in plans.items():
+        metrics = plan_node_metrics(spark, eid)
+        dedup = [i for i, (name, desc) in enumerate(nodes)
+                 if "Aggregate" in name and "key=[norm_url" in desc]
+        verdicts += [(i, dedup, metrics[i]["number of output rows"])
+                     for i, (name, desc) in enumerate(nodes)
+                     if "Python" in name and "_verdict" in desc]
+    # one verdict node; the plan graph lists a node before its children
+    assert len(verdicts) == 1, plans
+    i, dedup, seen = verdicts[0]
+    assert dedup and all(i < j for j in dedup), plans
+    assert seen == "12"
+
+
+def test_domain_filter_paths_vs_reference(spark):
+    """Both domain_filter paths — literal arrays_overlap for a list, the
+    suffix-explode join for a DataFrame — agree with a pure-Python
+    reference on 200 seeded random hosts (varied depth, case,
+    exact/suffix/miss relations to a 30-domain blocklist, nulls)."""
     import random
 
     from fermor_spark.pipeline.url import domain_filter
@@ -2409,8 +2453,7 @@ def test_domain_filter_three_paths_vs_reference(spark):
                                "i long, host string")
     bl = spark.createDataFrame([(d,) for d in blocked], "domain string")
     for out in (domain_filter(df, "host", blocked),
-                domain_filter(df, "host", bl),
-                domain_filter(df, "host", bl, max_broadcast_rows=1)):
+                domain_filter(df, "host", bl)):
         got = {r["i"]: r["kept"] for r in out.collect()}
         assert got == want
     assert False in want.values() and True in want.values()  # non-vacuous

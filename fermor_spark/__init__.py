@@ -18,13 +18,32 @@ Design notes (scale-first):
 - No driver-side collect in the hot path; the only collects live behind the
   explicitly size-guarded `algo` module (CFG-sized graphs, matching the
   reference's own usage).
+- The package imports none of its modules up front: Python workers start as
+  ``python -m fermor_spark.worker_daemon``, which runs this file first,
+  and pyspark must not be imported before that module settles
+  ``sys.path``. The public names load on first use (PEP 562).
 """
 
-from fermor_spark.session import get_spark
-from fermor_spark.graph import PropertyGraph
-from fermor_spark.route import Route
-from fermor_spark.conditions import Condition, handling, set_handler
+import importlib
+
+_EXPORTS = {
+    "get_spark": "fermor_spark.session",
+    "PropertyGraph": "fermor_spark.graph",
+    "Route": "fermor_spark.route",
+    "Condition": "fermor_spark.conditions",
+    "handling": "fermor_spark.conditions",
+    "set_handler": "fermor_spark.conditions",
+}
 
 __all__ = ["get_spark", "PropertyGraph", "Route",
            "Condition", "handling", "set_handler"]
 __version__ = "0.1.0"
+
+
+def __getattr__(name):
+    module = _EXPORTS.get(name)
+    if module is None:
+        raise AttributeError(f"module {__name__!r} has no attribute {name!r}")
+    value = getattr(importlib.import_module(module), name)
+    globals()[name] = value
+    return value

@@ -280,7 +280,12 @@ def robots_filter(df: DataFrame, url_col: str, robots_df: DataFrame,
     broadcasts, a full-crawl table of tens of millions of hosts shuffles
     on host. The verdict reads a column of the join, so it stays above
     the join: a URL dedup before the gate runs before the verdict too.
-    Null hosts and hosts with no robots.txt allow everything."""
+    The UDF is marked nondeterministic so that a caller's filter on the
+    verdict column, with the column kept, does not plan the UDF twice
+    (once under the filter, once for the column). The price: no filter
+    of the caller passes the verdict's projection, so filter other
+    columns before the gate. Null hosts and hosts with no robots.txt
+    allow everything."""
     import pandas as pd
 
     u = F.col(url_col)
@@ -295,6 +300,6 @@ def robots_filter(df: DataFrame, url_col: str, robots_df: DataFrame,
         return pd.Series([t is None or robots_allowed(p or "/", rules[t])
                           for p, t in zip(paths, texts)])
 
-    verdict = F.pandas_udf(_verdict, "boolean")
+    verdict = F.pandas_udf(_verdict, "boolean").asNondeterministic()
     return joined.select(*df.columns,
                          verdict(_part(u, "PATH"), "_rt").alias(out_col))

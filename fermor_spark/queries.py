@@ -5257,14 +5257,16 @@ def pipeline_crawl_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     nu = url_normalize(ex.select("url", "extracted_text"), "url")
     uniq = nu.groupBy("norm_url").agg(
         F.min_by("extracted_text", "url").alias("text"))
+    # the blocklist filter goes before the robots gate: no filter passes
+    # the verdict's projection (see robots_filter)
     polite = robots_filter(
         domain_filter(url_host(uniq, "norm_url"), "host",
-                      ["ads.example.com"]),
+                      ["ads.example.com"]).where("kept"),
         "norm_url",
         local_frame(
             spark, [("news.example.org", "User-agent: *\nDisallow: /private/")],
             "host string, robots_txt string"))
-    docs = polite.where(F.col("kept") & F.col("robots_ok")).select(
+    docs = polite.where("robots_ok").select(
         F.element_at(F.split("norm_url", "/"), -1).cast("long")
         .alias("doc_id"), "text")
     # cache the RECOVERED corpus eagerly: the back-half funnel's plan has

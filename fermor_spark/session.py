@@ -12,6 +12,8 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructType
 
+_PACKAGE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
 
 def get_spark(
     app_name: str = "fermor-spark",
@@ -23,6 +25,13 @@ def get_spark(
     AQE is on: runtime coalescing of shuffle partitions, skew-join
     handling, and dynamic broadcast-join conversion all matter at the
     100 TB design point and cost nothing locally.
+
+    Python workers start from ``fermor_spark.worker_daemon``, which
+    imports the installed pyspark in place of ``$SPARK_HOME``'s
+    ``pyspark.zip`` when both are the same release (see that module).
+    The directory that holds this package goes on the workers'
+    ``PYTHONPATH``, so the daemon module, and the engine functions that
+    UDF closures pickle by reference, import from any driver cwd.
     """
     cpus = cpus or os.environ.get("SPARK_GRAFT_CPUS") or "*"
     if shuffle_partitions is None:
@@ -36,6 +45,8 @@ def get_spark(
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
+        .config("spark.python.daemon.module", "fermor_spark.worker_daemon")
+        .config("spark.executorEnv.PYTHONPATH", _PACKAGE_ROOT)
         .config("spark.driver.memory",
                 os.environ.get("FERMOR_DRIVER_MEMORY") or _default_driver_memory())
         .config("spark.ui.enabled", "false")

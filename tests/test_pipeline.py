@@ -2412,6 +2412,31 @@ def test_robots_verdict_runs_above_url_dedup(spark):
     assert seen == "12"
 
 
+def test_robots_verdict_kept_column_runs_once(spark):
+    """A filter on the verdict that keeps the verdict column selected
+    plans one `_verdict` Python node, not one under the filter and a
+    second that recomputes the column above it."""
+    from fermor_spark.pipeline.url import robots_filter, url_normalize
+    from tests.fixtures import executed_plan_nodes
+
+    rows = [(f"http://news.example.org/{'private' if i % 3 == 0 else 'd'}/{i}",
+             f"t{i}") for i in range(12)]
+    crawl = url_normalize(spark.createDataFrame(rows, "url string, text string"),
+                          "url").groupBy("norm_url").agg(F.min("text").alias("text"))
+    robots = spark.createDataFrame(
+        [("news.example.org", "User-agent: *\nDisallow: /private/")],
+        "host string, robots_txt string")
+    polite = robots_filter(crawl, "norm_url", robots).where("robots_ok")
+    got = []
+    plans = executed_plan_nodes(spark, lambda: got.extend(polite.collect()))
+    assert sorted(r["text"] for r in got) == sorted(
+        f"t{i}" for i in range(12) if i % 3)
+    assert all(r["robots_ok"] is True for r in got)
+    verdicts = [desc for nodes in plans.values() for name, desc in nodes
+                if name == "ArrowEvalPython" and "_verdict" in desc]
+    assert len(verdicts) == 1, plans
+
+
 def test_domain_filter_paths_vs_reference(spark):
     """Both domain_filter paths — literal arrays_overlap for a list, the
     suffix-explode join for a DataFrame — agree with a pure-Python

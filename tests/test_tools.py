@@ -454,3 +454,39 @@ def test_no_module_global_state():
                     found += [f"{os.path.relpath(path, REPO)}:{ln}"
                               for ln in _global_statements(f.read())]
     assert not found, "module-global state: " + ", ".join(found)
+
+
+_TREE_PROBE = r'''
+import json, sys
+sys.path.insert(0, sys.argv[1])
+import pandas as pd
+import fermor_spark
+from fermor_spark import get_spark
+
+def where(batches):
+    import fermor_spark as fs
+    for _ in batches:
+        yield pd.DataFrame({"f": [fs.__file__]})
+
+spark = get_spark(app_name="tree-ab-probe", shuffle_partitions=1, cpus="1")
+worker = spark.range(1).mapInPandas(where, "f string").first()["f"]
+print("TREE_AB_CHILD " + json.dumps({"driver": fermor_spark.__file__,
+                                     "worker": worker}), flush=True)
+'''
+
+
+def test_tree_ab_child_workers_load_its_tree(tmp_path, monkeypatch):
+    """exp_tree_ab's arm B runs its own tree in its Python workers too,
+    not the fermor_spark of the caller's cwd."""
+    import shutil
+
+    import exp_tree_ab
+
+    tree = tmp_path / "tree"
+    shutil.copytree(os.path.join(REPO, "fermor_spark"), tree / "fermor_spark",
+                    ignore=shutil.ignore_patterns("__pycache__"))
+    monkeypatch.chdir(REPO)
+    monkeypatch.setenv("FERMOR_DRIVER_MEMORY", "1g")
+    got = exp_tree_ab._run_child(str(tree), child=_TREE_PROBE)
+    assert got["driver"].startswith(str(tree) + os.sep), got
+    assert got["worker"].startswith(str(tree) + os.sep), got

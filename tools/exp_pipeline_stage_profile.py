@@ -165,12 +165,12 @@ def profile_crawl(spark) -> list:
         F.min_by("extracted_text", "url").alias("text"))
     polite = robots_filter(
         domain_filter(url_host(uniq, "norm_url"), "host",
-                      ["ads.example.com"]),
+                      ["ads.example.com"]).where("kept"),
         "norm_url",
         local_frame(
             spark, [("news.example.org", "User-agent: *\nDisallow: /private/")],
             "host string, robots_txt string"))
-    docs = polite.where(F.col("kept") & F.col("robots_ok")).select(
+    docs = polite.where("robots_ok").select(
         F.element_at(F.split("norm_url", "/"), -1).cast("long")
         .alias("doc_id"), "text")
     docs = managed_cache(docs)

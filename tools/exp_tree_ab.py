@@ -93,9 +93,12 @@ def _export_tree(rev: str) -> str:
     return out
 
 
-def _run_child(tree: str, gate: str, runs: int) -> dict:
-    r = subprocess.run([sys.executable, "-c", _CHILD, tree, gate, str(runs)],
-                       capture_output=True, text=True, timeout=1800)
+def _run_child(tree: str, *args: str, child: str = _CHILD) -> dict:
+    """Run ``child`` with argv ``tree, *args``, in ``tree``: the Python
+    worker daemon puts its cwd first on ``sys.path``, so from any other
+    cwd holding a ``fermor_spark`` the workers would import that one."""
+    r = subprocess.run([sys.executable, "-c", child, tree, *args],
+                       capture_output=True, text=True, timeout=1800, cwd=tree)
     for line in reversed(r.stdout.splitlines()):
         if line.startswith("TREE_AB_CHILD "):
             return json.loads(line[len("TREE_AB_CHILD "):])
@@ -115,8 +118,8 @@ def main() -> None:
 
     a_best, b_best, a_floors, b_floors = [], [], [], []
     for rep in range(reps):
-        ra = _run_child(REPO, gate, runs)
-        rb = _run_child(tree_b, gate, runs)
+        ra = _run_child(REPO, gate, str(runs))
+        rb = _run_child(tree_b, gate, str(runs))
         a_best.append(ra["best"]); a_floors.append(ra["floor"])
         b_best.append(rb["best"]); b_floors.append(rb["floor"])
         print(f"rep {rep}: A(HEAD) runs={ra['runs']} floor={ra['floor']}  "

@@ -1,9 +1,14 @@
 """Dump .explain("formatted") for named queries into plans/<tag>/.
 
-Usage: python tools/explain_dump.py <tag> <suffix> [query ...]
+Usage: python tools/explain_dump.py [--executed] <tag> <suffix> [query ...]
   tag     directory under plans/ (e.g. r17)
   suffix  'before' or 'after' (file name becomes <query>_<suffix>.txt)
   query   registered or retired query names; default = the bench list
+  --executed  run the query and dump the executed plan of every SQL
+              execution it starts (one `node name | description` line per
+              node, expression and plan ids stripped so two runs diff cleanly).
+              For queries that materialize inside the call (eager caches,
+              a checkpointed result), whose formatted plan is one scan.
 
 Plans are captured at sf0.001 (plan SHAPE is SF-invariant; building the
 frame is cheap there) with the bench's shuffle-partition default so the
@@ -13,6 +18,7 @@ Exchange/ join-strategy evidence matches what the bench executes.
 from __future__ import annotations
 
 import os
+import re
 import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
@@ -30,9 +36,27 @@ def fmt_plan(df) -> str:
             "formatted"))
 
 
+def executed_plans(spark, build) -> str:
+    """Build and run one query; its executions' plan nodes, as text."""
+    from tests.fixtures import executed_plan_nodes
+
+    plans = executed_plan_nodes(
+        spark, lambda: build().write.format("noop").mode("overwrite").save())
+    out = []
+    for n, nodes in enumerate(plans.values()):
+        out.append(f"== execution {n} ==")
+        out += [re.sub(r"#\d+L?|(?<=plan_id=)\d+", "", f"{name} | {desc}")
+                for name, desc in nodes]
+    return "\n".join(out) + "\n"
+
+
 def main() -> None:
-    tag, suffix = sys.argv[1], sys.argv[2]
-    names = sys.argv[3:]
+    args = sys.argv[1:]
+    executed = "--executed" in args
+    if executed:
+        args.remove("--executed")
+    tag, suffix = args[0], args[1]
+    names = args[2:]
     reg = {**q.all_queries(), **q.retired_queries()}
     if not names:
         from bench import BENCH_QUERIES
@@ -44,8 +68,10 @@ def main() -> None:
     from fermor_spark.session import release_caches
     for name in names:
         try:
-            df = reg[name](spark, SF)
-            plan = fmt_plan(df)
+            if executed:
+                plan = executed_plans(spark, lambda: reg[name](spark, SF))
+            else:
+                plan = fmt_plan(reg[name](spark, SF))
         except Exception as exc:  # capture the failure instead of dying
             plan = f"EXPLAIN FAILED: {exc!r}"
         path = os.path.join(out_dir, f"{name}_{suffix}.txt")

@@ -436,43 +436,15 @@ class PropertyGraph:
             .distinct()
         )
 
-    def _v_probe_rows(self) -> int:
-        """Memoized ``bounded_broadcast`` limit-probe over V, shared by
-        every kind scan on this graph (``vertices(kind)`` here,
-        ``Route.of_kind`` in route.py) so a traversal chain pays the
-        probe job once, not per step. Keyed to the live V frame object:
-        graphs are built functionally (every mutation returns a new
-        PropertyGraph, and any in-place V change must rebind the
-        immutable DataFrame), so identity of ``self.V`` is exactly the
-        staleness signal — a rebound V re-probes instead of reusing a
-        bound proven on the smaller frame."""
-        from fermor_spark.hints import DEFAULT_MAX_ROWS
-
-        cached = getattr(self, "_v_probe_cache", None)
-        if cached is not None and cached[0] is self.V:
-            return cached[1]
-        rows = self.V.limit(DEFAULT_MAX_ROWS + 1).count()
-        self._v_probe_cache = (self.V, rows)
-        return rows
-
     def vertices(self, kind: str | None = None) -> "Route":
-        from fermor_spark.hints import bounded_broadcast
+        """Route over all vertices, or those of one ``kind`` (reference:
+        all-vertices plus of-kind, src/fermor/graph.clj:230-236 and
+        src/fermor/core.clj:1284-1289). The kind scan is
+        ``Route.of_kind``."""
         from fermor_spark.route import Route
 
-        ids = self.vertex_ids()
-        if kind is not None:
-            # size-guarded hint (r17, closes the r16 audit's deferred
-            # OOM class): V scales with the graph, and a literal
-            # F.broadcast bypassed autoBroadcastJoinThreshold — a
-            # guaranteed driver OOM at 100x. The guard hints only a
-            # probe-proven-small (id, kind) slice; above the bar the
-            # join falls back to Catalyst + AQE.
-            v = bounded_broadcast(self.V.select("id", "kind"),
-                                  known_rows=self._v_probe_rows())
-            ids = ids.join(v, "id", "left").where(
-                F.col("kind") == kind
-            ).select("id")
-        return Route(self, ids, "v")
+        r = Route(self, self.vertex_ids(), "v")
+        return r if kind is None else r.of_kind(kind)
 
     def edges(self, labels: Sequence[str] | str | None = None) -> "Route":
         from fermor_spark.route import Route

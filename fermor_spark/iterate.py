@@ -55,7 +55,6 @@ from pyspark.sql import DataFrame, Row, Window
 from pyspark.sql import functions as F
 
 from fermor_spark.graph import PropertyGraph
-from fermor_spark.hints import bounded_broadcast
 from fermor_spark.route import Route
 from fermor_spark.session import local_frame
 
@@ -1374,24 +1373,12 @@ def k_core(g: PropertyGraph, k: int, labels=None, max_iters: int = 500,
     def peel(deg: DataFrame, _: int) -> DataFrame:
         fr = deg.where(F.col("deg") < k).select("id")
         # edges lost by survivors: one per (frontier u → v) edge; rows whose
-        # v was removed (this round or earlier) drop out in the anti-join
-        # size-guarded hint (r17, closes the r16 audit's deferred OOM
-        # class): the round-1 frontier (every deg<k vertex) can be MOST
-        # of the graph, and the old literal F.broadcast collected it to
-        # the driver at any size. fr ⊆ deg, so the loop's own per-round
-        # count n bounds it with zero extra jobs; above the bar the
-        # semi-join falls back to Catalyst + AQE.
+        # v was removed (this round or earlier) drop out in the anti-join.
+        # Neither join is hinted: the planner sizes the frontier.
         delta = (
-            e.join(bounded_broadcast(fr.withColumnRenamed("id", "u"),
-                                     known_rows=n), "u", "left_semi")
+            e.join(fr.withColumnRenamed("id", "u"), "u", "left_semi")
             .groupBy(F.col("v").alias("id")).agg(F.count("*").alias("_d"))
         )
-        # The anti-join stays UNHINTED (r18, measured): forcing the same
-        # size-guarded broadcast the delta leg uses changed neither the
-        # jobs-per-round audit (7.2 both ways — a broadcast exchange is
-        # its own scheduled job exactly like the shuffle it replaces) nor
-        # the interleaved gate A/B (1.02-1.05x, flat at floor), because
-        # AQE already broadcasts the runtime-small frontier on its own.
         return (
             deg.join(fr, "id", "left_anti")
             .join(delta, "id", "left")

@@ -5338,7 +5338,6 @@ def sketch_bloom_membership(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     o = table(spark, sf_dir, "orders")
     c = table(spark, sf_dir, "customer")
-    from fermor_spark.hints import bounded_broadcast
 
     n_orders = o.count()
     sketch = sketches.bloom_build(o, "o_custkey",
@@ -5349,12 +5348,7 @@ def sketch_bloom_membership(spark: SparkSession, sf_dir: str) -> DataFrame:
     probed = sketches.bloom_member_col(probe_set, "key", sketch)
     truth = o.select(F.col("o_custkey").cast("long").alias("key")) \
         .distinct().withColumn("is_member", F.lit(True))
-    # the truth leg (distinct ordering customers) scales with SF — the
-    # r17 repo-wide audit caught this as the last unguarded data-scaled
-    # broadcast; |truth| <= |orders|, already counted for the filter
-    # sizing, so the guard costs zero extra jobs
-    j = probed.join(bounded_broadcast(truth, known_rows=n_orders),
-                    "key", "left") \
+    j = probed.join(truth, "key", "left") \
         .select("bloom_hit", F.coalesce("is_member", F.lit(False))
                 .alias("is_member"))
     agg = j.agg(
@@ -6346,12 +6340,11 @@ def dedup_clusters_distributed(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Rows whose EXECUTED implementation changed this round (error-path-only
 # changes stay off per the r10 convention). Rotates each round.
 _CHANGED_THIS_ROUND = [
-    # r17: vertices(kind) routes its (id, kind) V-slice hint through
-    # bounded_broadcast with a per-graph memoized limit probe (the r16
-    # audit's deferred OOM class — the literal F.broadcast bypassed
-    # autoBroadcastJoinThreshold on a frame that scales with the graph).
-    # Every registered gate rooting at a kind scan executes the guarded
-    # path (three more — g_out_nation, g_take_drop_parts,
+    # vertices(kind) goes through Route.of_kind, whose (id, kind) V-slice
+    # join carries no hint: the planner's broadcast threshold decides
+    # (r17 guarded a hint there with a per-graph limit probe).
+    # Every registered gate rooting at a kind scan executes that join
+    # (three more — g_out_nation, g_take_drop_parts,
     # g_lookahead_big_buyers — retired to _RETIRED_R17 below, which is
     # what makes this cohort fit the tier-A arithmetic):
     "g_2hop_region",
@@ -6369,8 +6362,8 @@ _CHANGED_THIS_ROUND = [
     # hint cannot leak past it (ADVICE r16 medium); the gate executing
     # siblings() also roots at a kind scan:
     "g_siblings_same_nation",
-    # r17: k_core's delta leg guards its frontier broadcast with the
-    # loop's own per-round count (the second deferred OOM-class site):
+    # k_core's delta leg joins its frontier with no hint (r17 guarded
+    # the broadcast with the loop's own per-round count):
     "g_kcore_ring_chains",
     "g_kcore_distributed",
     # r17: square_count's final fold is integer DIV 4 (exact above 2^53;
@@ -6380,10 +6373,9 @@ _CHANGED_THIS_ROUND = [
     # and sweeps hour-old orphans (ADVICE r16 low — the applicationId
     # keying accumulated one dir per run):
     "events_streaming_dir_table",
-    # r17: the bloom gate's truth leg (distinct ordering customers — an
-    # SF-scaling frame the r16 audit missed) now routes through
-    # bounded_broadcast, bounded by the order count the gate already
-    # pays for filter sizing:
+    # the bloom gate's truth leg (distinct ordering customers, a frame
+    # that scales with SF) joins with no hint (r17 guarded it by the
+    # order count):
     "sketch_bloom_membership",
 ]
 

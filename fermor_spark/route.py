@@ -252,16 +252,10 @@ class Route:
         return self._with(self.df.where(~F.col("id").isin([str(v) for v in vids])))
 
     def of_kind(self, kind: str) -> "Route":
-        """(reference: of-kind, src/fermor/core.clj:1284-1289). Kind lives in V.
-
-        The (id, kind) slice carries a size-guarded hint (r17): V scales
-        with the graph, so the old literal F.broadcast was an OOM at
-        100x — bounded_broadcast hints only when the graph's memoized
-        limit probe proves V small, else Catalyst + AQE plan the join."""
-        from fermor_spark.hints import bounded_broadcast
-
-        v = bounded_broadcast(self.g.V.select("id", "kind"),
-                              known_rows=self.g._v_probe_rows())
+        """(reference: of-kind, src/fermor/core.clj:1284-1289). Kind lives
+        in V, so the filter is a join against its (id, kind) slice; the
+        planner picks broadcast or shuffle from V's statistics."""
+        v = self.g.V.select("id", "kind")
         return self._with(
             self.df.join(v, "id", "left").where(F.col("kind") == kind).drop("kind")
         )

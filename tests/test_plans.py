@@ -596,121 +596,79 @@ def test_point_filters_auto_broadcast_frontier(spark):
     assert not getattr(g.vertices().none_of(["n:1"]), "_bcast_auto", False)
 
 
-def test_bounded_broadcast_guards_the_hint(spark):
-    """bounded_broadcast attaches the broadcast hint ONLY when the side
-    is provably small — the r17-ready replacement for the two deferred
-    OOM-class forced broadcasts (of_kind/vertices(kind) against V, the
-    k-core round frontier; PLANS.md r16 forced-broadcast audit). A
-    too-large side must come back as the SAME un-hinted frame so
-    Catalyst/AQE own the join strategy."""
-    from fermor_spark.hints import bounded_broadcast
+def test_planner_sizes_kind_scan_and_kcore_joins(spark):
+    """The kind scan (vertices(kind), vertices().of_kind(kind)) and
+    k-core's peel joins carry no broadcast hint, so the session's
+    autoBroadcastJoinThreshold alone picks the join. At the session
+    threshold the kind join's initial plan is a BroadcastHashJoin and
+    the analyzed plan has no ResolvedHint; at 1 KB the same joins plan
+    SortMergeJoin (a hint would force the broadcast past any threshold).
+    The values agree at both thresholds."""
+    import re as _re
 
-    big = spark.range(100).selectExpr("cast(id as string) id")
-    small = spark.range(5).selectExpr("cast(id as string) id")
-
-    # probe path: over the bar -> identity (no hint object created)
-    assert bounded_broadcast(big, max_rows=10) is big
-    # probe path: under the bar -> hinted (visible in the analyzed plan)
-    hinted = bounded_broadcast(small, max_rows=10)
-    assert hinted is not small
-    assert "ResolvedHint" in hinted._jdf.queryExecution().analyzed().toString()
-
-    # known_rows skips the probe and is taken as the caller's bound
-    assert bounded_broadcast(big, max_rows=10, known_rows=11) is big
-    assert bounded_broadcast(big, max_rows=10, known_rows=10) is not big
-
-    # hinted and un-hinted joins agree on results
-    left = spark.range(50).selectExpr("cast(id as string) id", "id * 2 as v")
-    a = sorted(left.join(bounded_broadcast(small, max_rows=10), "id").collect())
-    b = sorted(left.join(small, "id").collect())
-    assert a == b and len(a) == 5
-
-
-def test_kind_scan_sites_are_size_guarded(spark):
-    """r17 flip of the r16 audit's deferred OOM class: vertices(kind) and
-    Route.of_kind hint the (id, kind) V slice ONLY under the graph's
-    memoized probe bound. Under the bar (every gate graph) the plan
-    keeps the pre-flip BroadcastHashJoin; faking an over-the-bar probe
-    must drop the hint (Catalyst/AQE own the join) with equal values."""
+    from fermor_spark import iterate
     from fermor_spark.datasets import star_graph
+    from tests.fixtures import edges_graph, executed_plan_nodes
 
     g = star_graph(spark, SF)
-    # under the bar: kind scan broadcasts in the INITIAL plan, and the
-    # analyzed plan carries the explicit hint node
-    p = plan_of(g.vertices("nation").df)
-    assert "BroadcastHashJoin" in p and "SortMergeJoin" not in p
-    assert "ResolvedHint" in \
-        g.vertices("nation").df._jdf.queryExecution().analyzed().toString()
-    # the probe is memoized per graph (keyed to the live V frame)
-    assert g._v_probe_cache[0] is g.V
-    want_v = sorted(r["id"] for r in g.vertices("nation").df.collect())
-    want_k = sorted(r["id"] for r in
-                    g.vertices().of_kind("nation").df.collect())
+    # a 200-vertex ring with pendant chains: distributed k-core peels the
+    # chains over several rounds, and its frontier outgrows 1 KB
+    pairs = ([(f"r{i}", f"r{(i + 1) % 200}") for i in range(200)]
+             + [(f"r{i}", f"p{i}") for i in range(0, 200, 2)]
+             + [(f"p{i}", f"q{i}") for i in range(0, 200, 4)])
+    kg = edges_graph(spark, "to", pairs)
 
-    # fake an over-the-bar probe: hint gone on BOTH sites, values equal
-    g._v_probe_cache = (g.V, 10**9)
-    over_v = g.vertices("nation").df
-    over_k = g.vertices().of_kind("nation").df
-    assert "ResolvedHint" not in \
-        over_v._jdf.queryExecution().analyzed().toString()
-    assert "ResolvedHint" not in \
-        over_k._jdf.queryExecution().analyzed().toString()
-    assert sorted(r["id"] for r in over_v.collect()) == want_v
-    assert sorted(r["id"] for r in over_k.collect()) == want_k
+    def run():
+        kind = {"vertices": g.vertices("nation").df,
+                "of_kind": g.vertices().of_kind("nation").df}
+        joins = {k: _re.findall(r"\(\d+\) (BroadcastHashJoin|SortMergeJoin)",
+                                plan_of(df)) for k, df in kind.items()}
+        hinted = {k: "ResolvedHint" in
+                  df._jdf.queryExecution().analyzed().toString()
+                  for k, df in kind.items()}
+        values = {k: sorted(r["id"] for r in df.collect())
+                  for k, df in kind.items()}
+        core = {}
+        nodes = executed_plan_nodes(spark, lambda: core.update(
+            (r["id"], r["deg"]) for r in
+            iterate.k_core(kg, k=2, local_edge_threshold=0).collect()))
+        names = [n for ns in nodes.values() for n, _ in ns]
+        return joins, hinted, values, core, names
 
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    session = spark.conf.get(key)
+    try:
+        joins, hinted, values, core, names = run()
+        spark.conf.set(key, "1024")
+        joins_1k, hinted_1k, values_1k, core_1k, names_1k = run()
+    finally:
+        spark.conf.set(key, session)
 
-def test_kcore_frontier_guard_wired(spark, monkeypatch):
-    """r17: k_core's delta leg routes its frontier through
-    bounded_broadcast with the loop's own per-round surviving-degree
-    count as known_rows (fr ⊆ deg ⇒ the bound is sound and free). Wiring
-    is asserted by interception, and forcing the guard to refuse the
-    hint (the at-scale path) must leave the peel result unchanged."""
-    from fermor_spark import iterate
-    from tests.fixtures import edges_graph
-
-    g = edges_graph(
-        spark, "to",
-        [("a", "b"), ("b", "c"), ("c", "a"), ("c", "d"), ("d", "e")],
-    )
-    want = {r["id"]: r["deg"] for r in
-            iterate.k_core(g, k=2, local_edge_threshold=0).collect()}
-    assert want == {"a": 2, "b": 2, "c": 2}
-
-    seen = []
-
-    def refuse(df, max_rows=None, known_rows=None, **kw):
-        seen.append(known_rows)
-        return df  # over-the-bar behavior: no hint, Catalyst/AQE plan it
-
-    monkeypatch.setattr(iterate, "bounded_broadcast", refuse)
-    got = {r["id"]: r["deg"] for r in
-           iterate.k_core(g, k=2, local_edge_threshold=0).collect()}
-    assert got == want
-    # called once per peel round, always with the caller-known bound
-    assert seen and all(n is not None and n >= 0 for n in seen)
+    for k in ("vertices", "of_kind"):
+        assert joins[k] == ["BroadcastHashJoin"], (k, joins[k])
+        assert joins_1k[k] == ["SortMergeJoin"], (k, joins_1k[k])
+        assert not hinted[k] and not hinted_1k[k]
+    assert "BroadcastHashJoin" in names and "SortMergeJoin" not in names
+    assert "SortMergeJoin" in names_1k and "BroadcastHashJoin" not in names_1k
+    assert values == values_1k and len(values["vertices"]) == 25
+    assert values["vertices"] == values["of_kind"]
+    assert core == core_1k and len(core) == 200
+    assert set(core.values()) == {2}
 
 
-def test_bounded_broadcast_bytes_guard(spark):
-    """ADVICE r16: rows alone don't prove broadcast-safety — 1M rows of
-    a wide frame blows the 64 MB the row bar reasons from. The static
-    schema estimate must refuse wide frames at row counts the row bar
-    would pass, refuse narrow frames whose row count implies > max_bytes,
-    and stay job-free (known_rows path runs zero Spark jobs)."""
-    from fermor_spark.hints import (_estimated_row_bytes, bounded_broadcast)
+def test_first_kind_scan_runs_one_execution(spark):
+    """A fresh graph's first vertices(kind) is one SQL execution: the
+    kind scan pays no separate size probe of V before the query runs."""
+    from fermor_spark import PropertyGraph
+    from tests.fixtures import executed_plan_nodes
 
-    narrow = spark.range(5).selectExpr("cast(id as string) id")
-    wide = spark.range(5).selectExpr(
-        "cast(id as string) id", "array_repeat(id, 10) emb",
-        "named_struct('a', id, 'b', cast(id as string)) meta")
-
-    # estimates: narrow = one string; wide adds two nested columns
-    assert _estimated_row_bytes(narrow) == 64
-    assert _estimated_row_bytes(wide) == 64 + 512 + 512
-
-    # same known_rows: the narrow frame hints, the wide one refuses
-    kr = 200_000  # narrow: 12.8 MB est; wide: ~217 MB est
-    assert bounded_broadcast(narrow, known_rows=kr) is not narrow
-    assert bounded_broadcast(wide, known_rows=kr) is wide
-    # a tighter max_bytes binds before the row bar even for narrow frames
-    assert bounded_broadcast(narrow, known_rows=kr,
-                             max_bytes=1 << 20) is narrow
+    g = (PropertyGraph.build(spark)
+         .add_vertices([("c:1", None, "customer"), ("c:2", None, "customer"),
+                        ("n:1", None, "nation")])
+         .add_edges("in_nation", [("c:1", "n:1"), ("c:2", "n:1")])
+         .forked())
+    got = []
+    nodes = executed_plan_nodes(spark, lambda: got.extend(
+        r["id"] for r in g.vertices("customer").df.collect()))
+    assert sorted(got) == ["c:1", "c:2"]
+    assert len(nodes) == 1, nodes

@@ -285,8 +285,9 @@ def test_broadcast_sites_match_adjudicated_allowlist():
     """The r17 repo-wide forced-broadcast audit, frozen as an invariant
     (PLANS.md "r17: repo-wide forced-broadcast audit"): every literal
     F.broadcast / hint("broadcast") in non-test source is adjudicated as
-    schema-, cardinality-, or contract-bounded, or lives behind
-    bounded_broadcast's size guard. A NEW site anywhere fails this test
+    schema-, cardinality-, or contract-bounded; data-scaled sides carry
+    no hint and the planner's threshold decides (PLANS.md "One broadcast
+    bar"). A NEW site anywhere fails this test
     until it is adjudicated here — the r16 audit missed the bloom gate's
     SF-scaling truth leg precisely because nothing pinned the sweep.
 
@@ -323,9 +324,8 @@ def test_broadcast_sites_match_adjudicated_allowlist():
                            else "<module>")] += 1
 
     # every count below carries an adjudication in PLANS.md r17:
-    # bounded (nation/region/1-row/per-group/contract) or guarded
+    # bounded (nation/region/1-row/per-group/contract)
     allow = {
-        ("fermor_spark/hints.py", "bounded_broadcast"): 1,   # THE guard
         ("fermor_spark/iterate.py", "power_step"): 1,        # 1-row dangling mass
         ("fermor_spark/pipeline/dedup.py", "contamination_pairs"): 2,  # bench set by contract
         ("fermor_spark/pipeline/dedup.py", "dedup_clusters"): 1,  # driver-built UF map

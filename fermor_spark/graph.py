@@ -658,36 +658,32 @@ class PropertyGraph:
         """Validate that the (label-restricted) edges form a DAG — the
         dag-edge type as a build-time constraint (SURVEY §1.4; reference:
         dag-edge, src/fermor/graph.clj:19-42). Iterative leaf-stripping
-        (distributed topological peel); raises ValueError on a cycle."""
+        (distributed topological peel); raises ValueError on a cycle.
+
+        Runs on ``iterate._fixpoint`` (record ``acyclic``: the edges left
+        after each round's strip). ``max_iter`` bounds the emptiness
+        checks, the first of which is on the input edges, so the last
+        round's result is checked for a cycle only."""
+        from fermor_spark.iterate import _fixpoint, _record  # iterate imports graph
+
+        rec = _record("acyclic")
+
+        def strip(remaining: DataFrame, _: int) -> DataFrame:
+            # drop edges pointing at sinks (dst with no outgoing edge)
+            srcs = remaining.select(F.col("src").alias("dst")).distinct()
+            return remaining.join(srcs, "dst", "left_semi")
+
         e = self._edges_df(labels).select("src", "dst")
-        remaining = e.cache()
-        # superseded frames unpersist as the peel advances (the iterate.py
-        # loop discipline): this loop used to cache every iteration's
-        # frame and release NONE — up to max_iter live caches on a deep
-        # DAG, plus a permanent leak of the last one past return/raise
-        try:
-            for i in range(max_iter):
-                if remaining.limit(1).count() == 0:
-                    return self
-                # strip edges pointing at sinks (dst with no outgoing edge)
-                srcs = remaining.select(F.col("src").alias("x")).distinct()
-                nxt = remaining.join(
-                    srcs.withColumnRenamed("x", "dst"), "dst", "left_semi"
-                )
-                nxt = (nxt.localCheckpoint(eager=True) if i % 6 == 5
-                       else nxt.cache())
-                same = nxt.count() == remaining.count()
-                remaining.unpersist()
-                remaining = nxt
-                if same:
-                    raise ValueError(
-                        f"cycle detected among labels {labels!r}")
-            raise ValueError("assert_acyclic: max iterations exceeded")
-        finally:
-            try:
-                remaining.unpersist()
-            except Exception:
-                pass
+        n = e.count() if max_iter > 0 else None
+        if n == 0:
+            return self
+        for i, (_, (m,)) in enumerate(_fixpoint(rec, e, strip, max_iter)):
+            if m == n:
+                raise ValueError(f"cycle detected among labels {labels!r}")
+            if m == 0 and i + 1 < max_iter:
+                return self
+            n = m
+        raise ValueError("assert_acyclic: max iterations exceeded")
 
     def merge_with(self, other: "PropertyGraph", doc_merge) -> "PropertyGraph":
         """Merge graphs resolving edge-document conflicts with a user fn

@@ -3,11 +3,18 @@ traversal (`descend`/`all` family, reference: src/fermor/core.clj:978-1249,
 src/fermor/descend.clj) and of the component-style algorithms.
 
 The reference's stack-safe CPS trampoline collapses, on Spark, into one
-driver-side round loop, `_fixpoint`, that every operator here runs on:
+driver-side round loop, `_fixpoint`, that every round loop here runs on
+(and `graph.assert_acyclic` and `layout.force_atlas` too):
 
     for state, probe in _fixpoint(rec, state, step, max_rounds, probe):
         if <fixed point or empty frontier>: break
         emit / collect
+
+The one exception is SCC's outer FW-BW loop: its round state is
+materialized by the next trim pass's first aggregate, so a `_fixpoint`
+probe of its own would cost one more job per round.
+`tests/test_tools.py::test_round_loops_run_on_fixpoint` keeps any other
+checkpointing loop out of the package.
 
 Key semantic deltas (documented; the reference's own tests multiset-compare):
 - emission is breadth-first/unordered, not DFS-ordered;
@@ -620,13 +627,17 @@ def strongly_connected_components(
     hence its SCC's min). Set ``local_edge_threshold=0`` to force the pure
     distributed path (used by tests to exercise the floods).
 
-    Trim passes run on ``_fixpoint`` (record ``scc_trim``). The outer
-    FW-BW rounds and the flood blocks stay hand-rolled: a round is two
-    concurrent floods of several jobs each, and its tagged checkpoint is
-    materialized by the next trim's first-pass aggregate, not by a probe
-    of its own.
+    Trim passes and flood blocks run on ``_fixpoint`` (records
+    ``scc_trim``, ``scc_fwd`` and ``scc_bwd``; a flood record holds each
+    block's new-vertex count and ends in 0 per round). Only the outer
+    FW-BW loop stays off it: its tagged checkpoint is materialized by the
+    next trim's first-pass aggregate, so a probe of its own would add a
+    job per round. Its record, ``scc``, holds the open count per round.
     """
     rec, trim_rec = _record("scc"), _record("scc_trim")
+    # the flood records are made here: a pool thread does not see the
+    # calling thread's ContextVar
+    fwd_rec, bwd_rec = _record("scc_fwd"), _record("scc_bwd")
     fwd = _loop_adjacency(g, labels, "out")
     bwd = _loop_adjacency(g, labels, "in")
     # Trim adjacency: self-loops excluded — a vertex whose only cycle is a
@@ -673,9 +684,11 @@ def strongly_connected_components(
             if n_keep == 0 or n_tot == n_keep:
                 return tagged.where(F.col("_keep")).drop("_keep"), n_keep
 
-    def flood(adj: DataFrame, nodes: DataFrame, hops_per_round: int = 4) -> DataFrame:
+    def flood(adj: DataFrame, nodes: DataFrame, rec: list,
+              hops_per_round: int = 4) -> DataFrame:
         """nodes: (id, part, pivot). Returns (id, part) of vertices reachable
-        from their partition's pivot, staying within the partition.
+        from their partition's pivot, staying within the partition. Each
+        block's new-vertex count goes into ``rec``.
 
         Two sequential per-direction floods, restored in r9: r8 tried a
         direction-tagged union flood (one loop over fwd+bwd rows) to halve
@@ -696,11 +709,8 @@ def strongly_connected_components(
         """
         node_ids = nodes.select("id", "part")
         reached = nodes.where(F.col("id") == F.col("pivot")).select("id", "part")
-        frontier = reached
-        block = 0
-        while True:
-            hops = []
-            step = frontier
+
+        def block(frontier: DataFrame, _: int) -> DataFrame:
             # Each hop anti-joins the PRE-BLOCK reached set only. The r10
             # alternative — anti-joining a running (reached + prior hops)
             # union so a vertex found at hop 1 cannot re-enter hops 2-4 —
@@ -710,20 +720,20 @@ def strongly_connected_components(
             # and under AQE every added exchange is its own scheduled job,
             # so the extra stages cost more driver barriers than the
             # intra-block re-entries they avoid. Re-entries are bounded:
-            # each hop still dedups (distinct) and the block-end distinct
-            # collapses overlap before anything persists, so the compound
-            # is limited to branching^(hops_per_round) WITHIN one block —
-            # k=4 keeps that small by construction.
+            # the block-end distinct collapses overlap before anything
+            # persists, so the compound is limited to
+            # branching^(hops_per_round) WITHIN one block — k=4 keeps that
+            # small by construction.
             # No per-hop distinct (r18, guide §2.4): each hop's distinct
             # was an Exchange, and under AQE every exchange materializes
             # as its own scheduled job — the jobs-per-round audit read
             # ~80 jobs per FW-BW round, dominated by ~6 exchange-jobs per
-            # flood block. The block-end distinct below collapses the
-            # union before anything persists, so the reached SET per
-            # block is unchanged; intra-block duplication is bounded by
-            # branching^(hops_per_round) exactly like the re-entries the
-            # r10 note already accepts (k=4 keeps it small). Audit after:
-            # ~2 exchange-jobs per block, SCC gate 157 -> 143-146 jobs.
+            # flood block. The block-end distinct collapses the union
+            # before anything persists, so the reached SET per block is
+            # unchanged. Audit after: ~2 exchange-jobs per block, SCC gate
+            # 157 -> 143-146 jobs.
+            hops = []
+            step = frontier
             for _ in range(hops_per_round):
                 step = (
                     step.join(adj, step["id"] == adj["u"], "inner")
@@ -732,20 +742,17 @@ def strongly_connected_components(
                     .join(reached, ["id", "part"], "left_anti")
                 )
                 hops.append(step)
-            nxt = _union(hops).distinct()
-            # lazy checkpoint + count = ONE job per block (eager checkpoint
-            # then count paid two driver round trips for the same answer)
-            nxt = nxt.localCheckpoint(eager=False)
-            if nxt.count() == 0:
+            return _union(hops).distinct()
+
+        for i, (nxt, (n,)) in enumerate(_fixpoint(rec, reached, block), 1):
+            if n == 0:
                 return reached
             reached = reached.unionByName(nxt)
-            block += 1
-            if block % 4 == 0:
+            if i % 4 == 0:
                 # collapse reached's accumulating union-of-blocks lineage
                 # (every hop's anti-join rescans all of it) into one RDD;
-                # lazy — materialized by the next block's count job.
+                # lazy — materialized by the next block's probe job.
                 reached = reached.localCheckpoint(eager=False)
-            frontier = nxt
 
     def local_finish(open_nodes: DataFrame, settled: list) -> bool:
         """Collect the open subgraph and finish with driver Tarjan if it has
@@ -798,8 +805,8 @@ def strongly_connected_components(
         # widening the anti-join key — concurrent job submission is the
         # supported Spark idiom for independent subplans)
         with ThreadPoolExecutor(max_workers=2) as _ex:
-            _ff = _ex.submit(flood, fwd, nodes)
-            _fb = _ex.submit(flood, bwd, nodes)
+            _ff = _ex.submit(flood, fwd, nodes, fwd_rec)
+            _fb = _ex.submit(flood, bwd, nodes, bwd_rec)
             fr = _ff.result().withColumn("_f", F.lit(1))
             br = _fb.result().withColumn("_b", F.lit(1))
         tagged = (

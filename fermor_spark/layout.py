@@ -10,14 +10,23 @@ recomputed columns (mutable docs → recompute-and-replace, SURVEY §7).
 Repulsion is grid-bucketed (cell + 8 neighbors within `radius`), the
 scale-safe approximation of the reference's local-repulsion mode — O(V²)
 all-pairs repulsion does not survive 100×.
+
+`force_atlas` runs its steps on `iterate._fixpoint`, the round driver of
+every iterative operator: one lazy checkpoint and one probe job per step,
+the probe carrying the swinging/traction sums that set the next step's
+speed. `force_atlas_step` is one fixed-speed step for callers that drive
+their own loop.
 """
 
 from __future__ import annotations
+
+import math
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from fermor_spark.graph import PropertyGraph
+from fermor_spark.iterate import _fixpoint, _record
 
 
 def init_positions(g: PropertyGraph, seed: int = 42) -> DataFrame:
@@ -119,9 +128,11 @@ def force_atlas_step(
 ) -> DataFrame:
     """One constant-speed simulation step → new (id, x, y).
 
-    Iterate by calling in a loop with localCheckpoint every few steps
-    (lineage discipline as in fermor_spark.iterate); `force_atlas` below
-    adds the reference's adaptive speed on top.
+    The step reads ``positions`` several times (edge ends, grid cells,
+    gravity, the update join), so a caller that iterates it truncates the
+    lineage every step (a ``localCheckpoint``, as ``iterate._fixpoint``
+    does); un-truncated, the plan multiplies per step. ``force_atlas``
+    below is the variable-speed loop.
     """
     pos = positions.select("id", "x", "y")
     forces = _force_messages(
@@ -138,70 +149,76 @@ def force_atlas_step(
 
 
 def force_atlas(g: PropertyGraph, iterations: int = 50, labels=None,
-                seed: int = 42, adaptive: bool = True,
-                jitter_tolerance: float = 0.02, **params) -> DataFrame:
+                seed: int = 42, jitter_tolerance: float = 0.02,
+                **params) -> DataFrame:
     """Run the layout to `iterations` steps → final (id, x, y).
 
-    `adaptive=True` reproduces the reference's swinging/traction speed
-    adaptation (src/fermor/force_atlas.clj:37-42, 104-119) in message-
-    passing form. Per step, with v = this step's force-accumulated velocity
-    and p = the previous step's (undamped) velocity:
+    Reproduces the reference's swinging/traction speed adaptation
+    (src/fermor/force_atlas.clj:37-42, 104-119) in message-passing form.
+    Per step, with v = this step's force-accumulated velocity and p = the
+    previous step's (undamped) velocity:
 
       swinging = Σ |p − v|          (oscillation: direction reversals)
       traction = Σ ½|p + v|         (coherent motion)
 
-    — two scalar aggregates (one tiny collect per iteration, same
-    driver-coordination cost as a convergence probe). The global speed
-    chases `jitter_tolerance · efficiency · traction / swinging` with the
-    reference's guard rails (halve efficiency when swinging/traction > 2,
-    damp 0.7 on chaos, cap the per-step rise at 50%), each vertex applies
-    `speed / (1 + √(speed·|p−v|))` — swinging vertices slow down
-    individually — and velocity carries over with friction
-    `clamp(1 − 0.05·traction/V^1.8, 0.2, 0.95)` (mass simplified to 1;
-    the reference's degree-derived mass is a documented delta).
+    The global speed chases `jitter_tolerance · efficiency · traction /
+    swinging` with the reference's guard rails (halve efficiency when
+    swinging/traction > 2, damp 0.7 on chaos, cap the per-step rise at
+    50%), each vertex applies `speed / (1 + √(speed·|p−v|))` — swinging
+    vertices slow down individually — and velocity carries over with
+    friction `clamp(1 − 0.05·traction/V^1.8, 0.2, 0.95)` (mass simplified
+    to 1; the reference's degree-derived mass is a documented delta).
 
-    Positions are checkpointed EVERY step: a step references the state
-    frame several times (edge ends, grid cells, gravity, update join), so
-    plan size multiplies per un-truncated iteration — lineage discipline
-    here is what makes 800-iteration runs (the reference's UI workload)
-    feasible.
+    The steps run on ``iterate._fixpoint`` (record ``force_atlas``). The
+    round state is the pre-update frame (positions plus this step's
+    velocity); the round's one job checkpoints it and returns the probe
+    (Σ swinging, Σ traction, V). The driver derives speed and friction
+    from it, and the next step applies that update lazily before its force
+    messages; the last update is applied after the last round. The
+    per-step checkpoint is what keeps the lineage flat: a step reads the
+    state several times, so the plan would otherwise multiply per step —
+    800-iteration runs (the reference's UI workload) depend on it.
+    ``params`` are `_force_messages`' force constants.
     """
-    import math
+    force = {k: params.get(k, d) for k, d in (
+        ("gravity", 0.05), ("repulsion", 1.0), ("attraction", 0.2),
+        ("weight_influence", 1.0), ("radius", 40.0))}
+    swg_v = F.sqrt((F.col("pvx") - F.col("nvx")) ** 2 + (F.col("pvy") - F.col("nvy")) ** 2)
+    tra_v = F.sqrt((F.col("pvx") + F.col("nvx")) ** 2 + (F.col("pvy") + F.col("nvy")) ** 2) * 0.5
 
-    if not adaptive:
-        pos = init_positions(g, seed)
-        for i in range(iterations):
-            new = force_atlas_step(g, pos, labels=labels, **params).localCheckpoint(eager=True)
-            if i > 0:
-                pos.unpersist()
-            pos = new
-        return pos
-
-    state = init_positions(g, seed).select(
-        "id", "x", "y",
-        F.lit(0.0).alias("vx"), F.lit(0.0).alias("vy"),   # damped velocity
-        F.lit(0.0).alias("pvx"), F.lit(0.0).alias("pvy"),  # prev undamped velocity
-    )
-    vc = max(state.count(), 1)
-    speed, speed_efficiency = 1.0, 1.0
-    for i in range(iterations):
-        forces = _force_messages(
-            g, state.select("id", "x", "y"), labels,
-            params.get("gravity", 0.05), params.get("repulsion", 1.0),
-            params.get("attraction", 0.2), params.get("weight_influence", 1.0),
-            params.get("radius", 40.0),
+    def update(cur: DataFrame) -> DataFrame:
+        # the driver's last speed and friction, applied to a pre-update frame
+        factor = speed / (1.0 + F.sqrt(F.lit(speed) * swg_v))
+        return cur.select(
+            "id",
+            (F.col("x") + F.col("nvx") * factor).alias("x"),
+            (F.col("y") + F.col("nvy") * factor).alias("y"),
+            (F.col("nvx") * friction).alias("vx"),
+            (F.col("nvy") * friction).alias("vy"),
+            F.col("nvx").alias("pvx"),
+            F.col("nvy").alias("pvy"),
         )
-        cur = state.join(forces, "id", "left").select(
+
+    def step(cur: DataFrame, _: int) -> DataFrame:
+        state = update(cur)
+        forces = _force_messages(g, state.select("id", "x", "y"), labels,
+                                 **force)
+        return state.join(forces, "id", "left").select(
             "id", "x", "y", "pvx", "pvy",
             (F.col("vx") + F.coalesce(F.col("fx"), F.lit(0.0))).alias("nvx"),
             (F.col("vy") + F.coalesce(F.col("fy"), F.lit(0.0))).alias("nvy"),
         )
-        cur = cur.localCheckpoint(eager=True)
-        swg_v = F.sqrt((F.col("pvx") - F.col("nvx")) ** 2 + (F.col("pvy") - F.col("nvy")) ** 2)
-        tra_v = F.sqrt((F.col("pvx") + F.col("nvx")) ** 2 + (F.col("pvy") + F.col("nvy")) ** 2) * 0.5
-        agg = cur.agg(F.sum(swg_v).alias("s"), F.sum(tra_v).alias("t")).collect()[0]
-        swinging = float(agg["s"] or 0.0) + 1e-12
-        traction = float(agg["t"] or 0.0) + 1e-12
+
+    # all-zero velocities: update() of this frame is the initial layout
+    cur = init_positions(g, seed).select(
+        "id", "x", "y", *[F.lit(0.0).alias(c) for c in ("pvx", "pvy", "nvx", "nvy")])
+    speed, speed_efficiency, friction = 1.0, 1.0, 1.0
+    probe = (F.sum(swg_v), F.sum(tra_v), F.count(F.lit(1)))
+    for cur, (s, t, n) in _fixpoint(_record("force_atlas"), cur, step,
+                                    iterations, probe=probe):
+        swinging = float(s or 0.0) + 1e-12
+        traction = float(t or 0.0) + 1e-12
+        vc = max(n, 1)
         # reference tuning loop (force_atlas.clj:104-119)
         chaos_threshold = jitter_tolerance * min(
             10.0, 0.05 * math.sqrt(vc) * traction / (vc * vc)
@@ -218,19 +235,4 @@ def force_atlas(g: PropertyGraph, iterations: int = 50, labels=None,
             speed_efficiency *= 1.3
         speed = speed + min(target_speed - speed, 0.5 * speed)
         friction = min(0.95, max(0.2, 1 - 0.05 * traction / (vc ** 1.8)))
-        factor = speed / (1.0 + F.sqrt(F.lit(speed) * swg_v))
-        new = cur.select(
-            "id",
-            (F.col("x") + F.col("nvx") * factor).alias("x"),
-            (F.col("y") + F.col("nvy") * factor).alias("y"),
-            (F.col("nvx") * friction).alias("vx"),
-            (F.col("nvy") * friction).alias("vy"),
-            F.col("nvx").alias("pvx"),
-            F.col("nvy").alias("pvy"),
-        )
-        new = new.localCheckpoint(eager=True)
-        cur.unpersist()
-        if i > 0:
-            state.unpersist()
-        state = new
-    return state.select("id", "x", "y")
+    return update(cur).select("id", "x", "y")

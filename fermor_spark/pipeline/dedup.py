@@ -7,7 +7,7 @@ an all-pairs comparison. Exact dedup is a single hash-groupBy.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from fermor_spark.iterate import (
@@ -194,12 +194,16 @@ def ngram_jaccard_pairs(
     )
 
 
-def _signatures_from_shingles(sh: DataFrame, num_hashes: int) -> DataFrame:
+def _signatures_from_shingles(sh: DataFrame, num_hashes: int,
+                              *extra: Column) -> DataFrame:
+    """(id, h0..h{k-1}, *extra) over an (id, sh) shingle table: one
+    groupBy, so ``extra`` aggregates (a per-doc size) ride the same pass
+    instead of re-scanning the shingles."""
     aggs = [
         F.min(F.md5(F.concat(F.lit(str(i)), F.col("sh")).cast("binary"))).alias(f"h{i}")
         for i in range(num_hashes)
     ]
-    return sh.groupBy("id").agg(*aggs)
+    return sh.groupBy("id").agg(*aggs, *extra)
 
 
 def minhash_signatures(
@@ -213,18 +217,14 @@ def minhash_signatures(
         shingle_table(df, id_col, text_col, shingle_n), num_hashes)
 
 
-def lsh_candidates(signatures: DataFrame, bands: int, rows_per_band: int) -> DataFrame:
-    """Candidate pairs sharing at least one LSH band → (id_a, id_b).
-
-    bands × rows_per_band must equal the signature width. The join key is
-    (band, concatenated-rows) — a pure equi-join, shuffle on the band key.
+def _band_keys(signatures: DataFrame, bands: int, rows_per_band: int) -> DataFrame:
+    """(id, band, key): each band's ``rows_per_band`` signature columns
+    concatenated into one equi-join key.
 
     Banding is ONE array-explode projection, not a union of per-band
     selects: the union form re-evaluated the upstream signature
     aggregation once per band per self-join side (16 recomputations at
-    bands=8 — measured 12s for 1.2k candidate pairs at sf0.1). With a
-    single-scan explode the self-join's two identical legs also collapse
-    into one reused exchange."""
+    bands=8 — measured 12s for 1.2k candidate pairs at sf0.1)."""
     band_structs = [
         F.struct(
             F.lit(band).alias("band"),
@@ -233,9 +233,19 @@ def lsh_candidates(signatures: DataFrame, bands: int, rows_per_band: int) -> Dat
         )
         for band in range(bands)
     ]
-    banded = signatures.select(
+    return signatures.select(
         "id", F.explode(F.array(*band_structs)).alias("bk")
     ).select("id", F.col("bk.band").alias("band"), F.col("bk.key").alias("key"))
+
+
+def lsh_candidates(signatures: DataFrame, bands: int, rows_per_band: int) -> DataFrame:
+    """Candidate pairs sharing at least one LSH band → (id_a, id_b).
+
+    bands × rows_per_band must equal the signature width. The join key is
+    (band, concatenated-rows) — a pure equi-join, shuffle on the band key.
+    With the single-scan banding of ``_band_keys`` the self-join's two
+    identical legs collapse into one reused exchange."""
+    banded = _band_keys(signatures, bands, rows_per_band)
     a = banded.select(F.col("id").alias("id_a"), "band", "key")
     b = banded.select(F.col("id").alias("id_b"), "band", "key")
     return (
@@ -1011,34 +1021,6 @@ def incremental_minhash_dedup(new_df: DataFrame, corpus_df: DataFrame,
             "hashes would be ignored)")
     rows = num_hashes // num_bands
 
-    def sig(sh):
-        # per-doc size rides the SAME groupBy as the signature — a
-        # separate size agg would re-scan the shingle table
-        aggs = [F.min(F.md5(F.concat(F.lit(str(i)), F.col("sh"))
-                            .cast("binary"))).alias(f"h{i}")
-                for i in range(num_hashes)] + [F.count("*").alias("nsz")]
-        return sh.groupBy("id").agg(*aggs)
-
-    def band_keys(mh, idname):
-        # ONE array-explode projection, not a union of per-band selects:
-        # the union form re-evaluates the upstream signature aggregation
-        # once per band (lsh_candidates learned this at r6 — measured 4x
-        # replay of the 8-md5 groupBy per side here, the dominant stage)
-        band_structs = [
-            F.struct(
-                F.lit(bnd).alias("band"),
-                F.concat(*[F.col(f"h{bnd * rows + r}")
-                           for r in range(rows)]).alias("key"))
-            for bnd in range(num_bands)
-        ]
-        return mh.select(
-            F.col("id").alias(idname),
-            F.explode(F.array(*band_structs)).alias("bk")
-        ).select(idname, F.col("bk.band").alias("band"),
-                 F.col("bk.key").alias("key"))
-
-    from fermor_spark.session import managed_cache
-
     # both shingle tables have 2 consumers inside one action (the
     # signature agg and the intersection join) — the multi-consumer
     # eager-cache rule applies, or each consumer replays the corpus
@@ -1050,14 +1032,18 @@ def incremental_minhash_dedup(new_df: DataFrame, corpus_df: DataFrame,
     csh.count()
     # signature frames are tiny (one row per doc) but their producer —
     # the 8-md5 groupBy over the big shingle table — is the dominant
-    # stage; band_keys and the size lookup both read them, so cache
-    # eagerly to pin exactly-one signature pass per side per action
-    nmh = managed_cache(sig(nsh))
+    # stage; the banding and the size lookup both read them, so cache
+    # eagerly to pin exactly-one signature pass per side per action. The
+    # per-doc size rides the SAME groupBy (a separate size agg would
+    # re-scan the shingle table).
+    size = F.count("*").alias("nsz")
+    nmh = managed_cache(_signatures_from_shingles(nsh, num_hashes, size))
     nmh.count()
-    cmh = managed_cache(sig(csh))
+    cmh = managed_cache(_signatures_from_shingles(csh, num_hashes, size))
     cmh.count()
-    cand = (band_keys(nmh, "new_id")
-            .join(band_keys(cmh, "corpus_id"), ["band", "key"])
+    cand = (_band_keys(nmh, num_bands, rows).withColumnRenamed("id", "new_id")
+            .join(_band_keys(cmh, num_bands, rows)
+                  .withColumnRenamed("id", "corpus_id"), ["band", "key"])
             .select("new_id", "corpus_id").distinct())
     nsz = nmh.select(F.col("id").alias("new_id"), F.col("nsz").alias("na"))
     csz = cmh.select(F.col("id").alias("corpus_id"),

@@ -2216,11 +2216,11 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     At scale: shingle explode → groupBy doc (map-side combine) →
     band-key self-join, never an all-pairs comparison.
     """
-    sh = _shingles_df(spark, sf_dir)
-    aggs = [
-        F.min(F.md5(F.concat(F.lit(str(i)), F.col("sh")).cast("binary"))).alias(f"h{i}")
-        for i in range(8)
-    ]
+    from fermor_spark.pipeline.dedup import (_signatures_from_shingles,
+                                             lsh_candidates, shingle_table)
+    from fermor_spark.session import managed_cache
+
+    sh = shingle_table(table(spark, sf_dir, "documents"), "doc_id", "text", 3)
     # eager-cache the SIGNATURE table (r14; the incremental variant's
     # c420cbe treatment, pre-applied per VERDICT r13 #4): the band
     # self-join reads `bands` on BOTH sides, and uncached each side
@@ -2230,33 +2230,10 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     # signature table is n_docs × 8 hex strings (corpus-shrinking, tiny
     # at any SF), so caching it is the production shape too: at 100 TB
     # you persist signatures, never the shingle explode.
-    from fermor_spark.session import managed_cache
-    mh = managed_cache(sh.groupBy("doc_id").agg(*aggs))
+    mh = managed_cache(_signatures_from_shingles(sh, 8))
     mh.count()
-    # ONE array-explode banding (the lsh_candidates pattern) — the union
-    # of per-band selects re-evaluated the signature groupBy once per
-    # band per self-join side (8×); under full-bench storage pressure a
-    # shingle-cache eviction multiplied through exactly those recomputes
-    # (the r12 driver band's 6.7 s mid-sequence spike). Fourth and last
-    # occurrence of the trap (r13).
-    band_structs = [
-        F.struct(F.lit(band).alias("band"),
-                 F.concat(F.col(f"h{2*band}"),
-                          F.col(f"h{2*band+1}")).alias("key"))
-        for band in range(4)
-    ]
-    bands = mh.select(
-        "doc_id", F.explode(F.array(*band_structs)).alias("bk")
-    ).select("doc_id", F.col("bk.band").alias("band"),
-             F.col("bk.key").alias("key"))
-    a = bands.select(F.col("doc_id").alias("doc_a"), "band", "key")
-    b = bands.select(F.col("doc_id").alias("doc_b"), "band", "key")
-    return (
-        a.join(b, ["band", "key"])
-        .where(F.col("doc_a") < F.col("doc_b"))
-        .select("doc_a", "doc_b")
-        .distinct()
-    )
+    return lsh_candidates(mh, 4, 2).select(
+        F.col("id_a").alias("doc_a"), F.col("id_b").alias("doc_b"))
 
 
 # --------------------------------------------------------------------------

@@ -16,6 +16,18 @@ def test_assert_acyclic(spark):
     cyc = edges_graph(spark, "to", [("a", "b"), ("b", "a")])
     with pytest.raises(ValueError, match="cycle"):
         cyc.assert_acyclic("to")
+    # max_iter counts emptiness checks, the first on the input edges: a
+    # 3-edge chain strips to nothing in 3 rounds, and the 4th check sees it
+    chain = edges_graph(spark, "to", [("a", "b"), ("b", "c"), ("c", "d")])
+    with pytest.raises(ValueError, match="max iterations exceeded"):
+        chain.assert_acyclic("to", max_iter=3)
+    chain.assert_acyclic("to", max_iter=4)
+    assert iterate.round_rows("acyclic") == [2, 1, 0]
+    with pytest.raises(ValueError, match="cycle"):
+        cyc.assert_acyclic("to", max_iter=1)
+    assert iterate.round_rows("acyclic") == [2]
+    chain.assert_acyclic("absent")  # no edges of that label: a DAG
+    assert iterate.round_rows("acyclic") == []
 
 
 def test_remove_documents(spark):

@@ -165,6 +165,22 @@ def test_scc(spark):
         assert sum(len(v) for v in comps.values()) == 8
 
 
+def test_scc_flood_blocks_record_rounds(spark):
+    # forced-distributed SCC on a ring: one pivot flood per direction
+    # covers the ring, each block's new-vertex count goes into that
+    # direction's record, and each flood ends on an empty block
+    ring = [(f"r{i}", f"r{(i + 1) % 6}") for i in range(6)]
+    g = edges_graph(spark, "to", ring)
+    comps = {r["id"]: r["component"] for r in
+             iterate.strongly_connected_components(g, local_edge_threshold=0).collect()}
+    assert comps == {f"r{i}": "r0" for i in range(6)}
+    for op in ("scc_fwd", "scc_bwd"):
+        rows = iterate.round_rows(op)
+        assert rows and rows[-1] == 0, (op, rows)
+        assert sum(rows) == 5, (op, rows)   # every non-pivot vertex once
+    assert iterate.LAST_SCC_ROUNDS == 1
+
+
 @pytest.mark.parametrize("thresh", [200_000, 0])  # local numpy / distributed
 def test_shortest_path_weighted(spark, thresh):
     from fermor_spark import PropertyGraph

@@ -191,12 +191,15 @@ def test_force_atlas_adaptive_damps_overshoot(spark):
         rows = df.collect()
         return sum(math.hypot(r["x"], r["y"]) for r in rows) / len(rows)
 
-    s0 = spread(layout.init_positions(g))
-    runaway = spread(layout.force_atlas(g, iterations=12, adaptive=False, speed=5.0))
-    adaptive = spread(layout.force_atlas(g, iterations=12, adaptive=True,
-                                         jitter_tolerance=0.5))
+    pos = layout.init_positions(g)
+    s0 = spread(pos)
+    for _ in range(12):
+        pos = layout.force_atlas_step(g, pos, speed=5.0).localCheckpoint()
+    runaway = spread(pos)
+    adaptive = spread(layout.force_atlas(g, iterations=12, jitter_tolerance=0.5))
     assert runaway > s0 * 10      # fixed speed 5.0 diverges on this fixture
     assert adaptive < s0          # adaptive contracts instead
+    assert len(iterate.round_rows("force_atlas")) == 12
 
 
 def test_distinct_in(spark):

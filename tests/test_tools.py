@@ -456,6 +456,94 @@ def test_no_module_global_state():
     assert not found, "module-global state: " + ", ".join(found)
 
 
+_MATERIALIZING = {"localCheckpoint", "checkpoint", "cache", "persist"}
+
+# (path, enclosing def) -> why that loop checkpoints outside _fixpoint
+_OFF_FIXPOINT_LOOPS = {
+    ("fermor_spark/iterate.py", "_fixpoint"): "the round driver itself",
+    ("fermor_spark/iterate.py", "strongly_connected_components"):
+        "SCC's outer FW-BW loop: the next trim pass's first aggregate "
+        "materializes its tagged checkpoint, so a probe of its own would "
+        "add a job per round",
+}
+
+
+def _checkpointing_loops(source: str) -> list:
+    """``(line, enclosing def)`` of every ``for``/``while`` whose body
+    calls one of ``_MATERIALIZING`` and whose iterable does not call
+    ``_fixpoint`` (``enumerate(_fixpoint(...))`` counts as one)."""
+    import ast
+
+    funcs = (ast.FunctionDef, ast.AsyncFunctionDef)
+    hits = []
+
+    def calls(nodes, names) -> bool:
+        return any(isinstance(c, ast.Call) and (
+            getattr(c.func, "attr", None) in names
+            or getattr(c.func, "id", None) in names)
+            for n in nodes for c in ast.walk(n))
+
+    def visit(node, func: str):
+        for child in ast.iter_child_nodes(node):
+            name = child.name if isinstance(child, funcs) else func
+            if (isinstance(child, (ast.For, ast.AsyncFor, ast.While))
+                    and calls(child.body, _MATERIALIZING)
+                    and not (isinstance(child, (ast.For, ast.AsyncFor))
+                             and calls([child.iter], {"_fixpoint"}))):
+                hits.append((child.lineno, func))
+            visit(child, name)
+
+    visit(ast.parse(source), "<module>")
+    return hits
+
+
+def test_checkpointing_loop_detector():
+    src = (
+        "def a(df):\n"
+        "    for i in range(3):\n"
+        "        df = df.localCheckpoint(eager=False)\n"
+        "    while True:\n"
+        "        df.cache()\n"
+        "    for x, (n,) in _fixpoint(rec, df, step):\n"
+        "        df = x.localCheckpoint()\n"
+        "    for i, (x, _) in enumerate(_fixpoint(rec, df, step), 1):\n"
+        "        df = x.persist()\n"
+        "    for i in range(3):\n"
+        "        df = df.select('a')\n"
+        "def b(df):\n"
+        "    for i in range(3):\n"
+        "        def c():\n"
+        "            return df.checkpoint()\n"
+    )
+    assert _checkpointing_loops(src) == [(2, "a"), (4, "a"), (13, "b")]
+
+
+def test_round_loops_run_on_fixpoint():
+    """Every round loop that checkpoints or caches per round runs on
+    ``iterate._fixpoint`` (one lazy checkpoint plus one probe job per
+    round, and a per-call round record). A hand-rolled loop brings its
+    own checkpoint rule and its own probe jobs; the allowlist names the
+    loops that stay off it, each with its reason."""
+    from collections import Counter
+
+    root = os.path.join(REPO, "fermor_spark")
+    found, allowed = [], Counter()
+    for dirpath, _, files in os.walk(root):
+        for fn in sorted(files):
+            if fn.endswith(".py"):
+                path = os.path.join(dirpath, fn)
+                rel = os.path.relpath(path, REPO)
+                with open(path) as f:
+                    for ln, func in _checkpointing_loops(f.read()):
+                        if (rel, func) in _OFF_FIXPOINT_LOOPS:
+                            allowed[rel, func] += 1
+                        else:
+                            found.append(f"{rel}:{ln} ({func})")
+    assert not found, "round loops off iterate._fixpoint: " + ", ".join(found)
+    # one loop per allowlisted def: a second one there needs its own reason
+    assert allowed == dict.fromkeys(_OFF_FIXPOINT_LOOPS, 1), allowed
+
+
 _TREE_PROBE = r'''
 import json, sys
 sys.path.insert(0, sys.argv[1])

@@ -1,9 +1,10 @@
 """Job-per-round audit of the forced-distributed iterative gates
 (VERDICT r17 #3/#4).
 
-Counts the Spark JOBS each forced-distributed iterative operator pays,
-via setJobGroup + statusTracker (the UI is disabled in session.py, so
-no REST API). Prints total jobs, rounds (LAST_*_ROUNDS) and jobs/round;
+Counts the Spark JOBS each forced-distributed iterative operator pays:
+the jobs in the app status store whose id is above the highest id seen
+before the call (the UI is disabled in session.py, so no REST API).
+Prints total jobs, rounds (LAST_*_ROUNDS) and jobs/round;
 if trim or a convergence probe pays separable jobs, the total shows it.
 
 Run: python tools/exp_scc_jobcount.py [scc|kcore|cc|bf|bfs|dedup] [reps]
@@ -57,19 +58,24 @@ def main() -> None:
         out.write.format("noop").mode("overwrite").save()
         return rounds_fn()
 
-    def total_jobs() -> int:
-        # AppStatusStore works with the UI disabled; jobsList(null) = all.
-        # The SCC floods run on worker threads whose jobs don't inherit a
-        # thread-local job group, so a before/after total is the only
-        # count that sees every job.
-        return sc._jsc.sc().statusStore().jobsList(None).size()
+    store = sc._jsc.sc().statusStore()
+    to_java = spark._jvm.scala.jdk.javaapi.CollectionConverters
+
+    def job_ids() -> list:
+        # AppStatusStore works with the UI disabled; jobsList(null) = all
+        # RETAINED jobs. The SCC floods run on worker threads whose jobs
+        # don't inherit a thread-local job group, so the count goes by job
+        # id: ids rise by one per submitted job, while the store trims its
+        # oldest past spark.ui.retainedJobs (1,000), so a before/after
+        # difference of its size undercounts once the store is full.
+        return [j.jobId() for j in to_java.asJava(store.jobsList(None))]
 
     for rep in range(reps):
-        before = total_jobs()
+        before = max(job_ids(), default=-1)
         t0 = time.perf_counter()
         rounds = run()
         dt = round(time.perf_counter() - t0, 3)
-        n = total_jobs() - before
+        n = sum(1 for i in job_ids() if i > before)
         print(json.dumps({
             "rep": rep, "which": which, "sec": dt, "rounds": rounds,
             "n_jobs": n,

@@ -48,6 +48,12 @@ Round telemetry: `round_rows(op)` is the per-round probe record of the
 calling context's most recent `op` call (each thread has its own), and
 `LAST_<OP>_ROUNDS` (module `__getattr__`) is its length — 0 when the
 driver-side finish ran instead of distributed rounds.
+
+Connected components have one engine, `_pair_components`: its input is
+a (u, v) pair frame and an (id) universe, and its one record is `cc`.
+`connected_components` passes a graph's edges, and
+`pipeline.dedup.dedup_clusters` (SemDeDup's resolution too) passes
+near-dup pairs.
 """
 
 from __future__ import annotations
@@ -517,6 +523,62 @@ def _small_star(e: DataFrame) -> DataFrame:
     )
 
 
+def _pair_components(pairs: DataFrame, universe: DataFrame, *,
+                     max_iter: int, local_edge_threshold: int) -> DataFrame:
+    """Min-id connected components of the undirected pair graph
+    ``pairs`` (u, v), labelled over ``universe`` (id) → (id, comp). The
+    one CC engine: ``connected_components`` and
+    ``pipeline.dedup.dedup_clusters`` both run on it (record ``cc``).
+
+    One orientation per pair is enough: large-star symmetrizes. Ids keep
+    their type. A universe id with no pair labels itself; a pair id
+    outside the universe is not emitted but still links its neighbors.
+    Raises if ``max_iter`` rounds end before the fixed point."""
+    rec = _record("cc")
+    # lazy checkpoint: the driver-scale probe or the first count
+    # materializes it, so the distinct (and whatever built the pairs)
+    # runs once on either path
+    edges = (pairs.where(F.col("u") != F.col("v"))
+             .select("u", "v").distinct().localCheckpoint(eager=False))
+    id_t = edges.schema["u"].dataType.simpleString()
+
+    def local(epdf):
+        comp = _min_label_components(epdf["u"].tolist(), epdf["v"].tolist())
+        return local_frame(edges.sparkSession, comp.items(),
+                           f"id {id_t}, comp {id_t}")
+
+    epdf = _driver_scale(edges, local_edge_threshold)
+    if epdf is not None:
+        parents = local(epdf)
+    else:
+        n_edges = edges.count()
+        contract = lambda e, _: _small_star(_large_star(e))  # noqa: E731
+        for new, (n_new,) in _fixpoint(rec, edges, contract, max_iter):
+            # symmetric fixed-point test: both sides are distinct sets, so
+            # new ⊆ old together with |new| == |old| means new == old. A
+            # subset-only probe would accept a still-shrinking edge set.
+            converged = (
+                n_new == n_edges and new.exceptAll(edges).limit(1).count() == 0
+            )
+            edges, n_edges = new, n_new
+            if converged:
+                # a star forest (child → component-min center); vertices
+                # never seen as a child are their own component
+                parents = (edges.groupBy("u").agg(F.min("v").alias("comp"))
+                           .withColumnRenamed("u", "id"))
+                break
+            if local_edge_threshold and n_edges <= local_edge_threshold:
+                parents = local(edges.toPandas())
+                break
+        else:
+            raise RuntimeError(
+                f"connected components: no fixed point after max_iter={max_iter} rounds")
+    return (
+        universe.join(parents, "id", "left")
+        .select("id", F.coalesce(F.col("comp"), F.col("id")).alias("comp"))
+    )
+
+
 def connected_components(g: PropertyGraph, labels=None,
                          incident_only: bool = False,
                          max_iter: int = 50,
@@ -546,54 +608,15 @@ def connected_components(g: PropertyGraph, labels=None,
     local finish only fires once the pair set is driver-scale — exactly
     when per-round shuffle barriers would dominate. Pass 0 to force the
     pure distributed path (tests assert its O(log n) round count).
+
+    The graph's (u, v) edge pairs go to ``_pair_components``, the engine
+    ``dedup_clusters`` shares; its one round record is ``cc``. Raises if
+    ``max_iter`` rounds end before the fixed point.
     """
-    rec = _record("cc")
     universe = g.vertices_with_edge(labels) if incident_only else g.vertex_ids()
-    # lazy checkpoint: the driver-scale probe or the first count
-    # materializes it, so the distinct runs once on either path
-    edges = (_step_edges(g, labels, "both").where(F.col("u") != F.col("v"))
-             .select("u", "v").distinct().localCheckpoint(eager=False))
-
-    def local(epdf):
-        comp = _min_label_components(epdf["u"].tolist(), epdf["v"].tolist())
-        if not comp:
-            return None
-        import pandas as pd
-
-        return g.spark.createDataFrame(pd.DataFrame({
-            "id": pd.array(list(comp), dtype="string"),
-            "comp": pd.array(list(comp.values()), dtype="string"),
-        }), "id string, comp string")
-
-    parents = None
-    epdf = _driver_scale(edges, local_edge_threshold)
-    if epdf is not None:
-        parents = local(epdf)
-    else:
-        n_edges = edges.count()
-        contract = lambda e, _: _small_star(_large_star(e))  # noqa: E731
-        for new, (n_new,) in _fixpoint(rec, edges, contract, max_iter):
-            # symmetric fixed-point test: both sides are distinct sets, so
-            # new ⊆ old together with |new| == |old| means new == old. A
-            # subset-only probe would accept a still-shrinking edge set.
-            converged = (
-                n_new == n_edges and new.exceptAll(edges).limit(1).count() == 0
-            )
-            edges, n_edges = new, n_new
-            if converged:
-                break
-            if local_edge_threshold and n_edges <= local_edge_threshold:
-                parents = local(edges.toPandas())
-                break
-    # fixed point is a star forest (child → component-min center); vertices
-    # never seen as a child are their own component (centers + isolated)
-    if parents is None:
-        parents = edges.groupBy("u").agg(F.min("v").alias("comp")).withColumnRenamed("u", "id")
-    comp = (
-        universe.join(parents, "id", "left")
-        .select("id", F.coalesce(F.col("comp"), F.col("id")).alias("comp"))
-    )
-    return _persist(comp)
+    return _persist(_pair_components(
+        _step_edges(g, labels, "both"), universe, max_iter=max_iter,
+        local_edge_threshold=local_edge_threshold))
 
 
 def strongly_connected_components(

@@ -149,8 +149,10 @@ def force_atlas_step(
 
 
 def force_atlas(g: PropertyGraph, iterations: int = 50, labels=None,
-                seed: int = 42, jitter_tolerance: float = 0.02,
-                **params) -> DataFrame:
+                seed: int = 42, jitter_tolerance: float = 0.02, *,
+                gravity: float = 0.05, repulsion: float = 1.0,
+                attraction: float = 0.2, weight_influence: float = 1.0,
+                radius: float = 40.0) -> DataFrame:
     """Run the layout to `iterations` steps → final (id, x, y).
 
     Reproduces the reference's swinging/traction speed adaptation
@@ -178,11 +180,8 @@ def force_atlas(g: PropertyGraph, iterations: int = 50, labels=None,
     per-step checkpoint is what keeps the lineage flat: a step reads the
     state several times, so the plan would otherwise multiply per step —
     800-iteration runs (the reference's UI workload) depend on it.
-    ``params`` are `_force_messages`' force constants.
+    The keyword-only parameters are `_force_messages`' force constants.
     """
-    force = {k: params.get(k, d) for k, d in (
-        ("gravity", 0.05), ("repulsion", 1.0), ("attraction", 0.2),
-        ("weight_influence", 1.0), ("radius", 40.0))}
     swg_v = F.sqrt((F.col("pvx") - F.col("nvx")) ** 2 + (F.col("pvy") - F.col("nvy")) ** 2)
     tra_v = F.sqrt((F.col("pvx") + F.col("nvx")) ** 2 + (F.col("pvy") + F.col("nvy")) ** 2) * 0.5
 
@@ -202,7 +201,8 @@ def force_atlas(g: PropertyGraph, iterations: int = 50, labels=None,
     def step(cur: DataFrame, _: int) -> DataFrame:
         state = update(cur)
         forces = _force_messages(g, state.select("id", "x", "y"), labels,
-                                 **force)
+                                 gravity, repulsion, attraction,
+                                 weight_influence, radius)
         return state.join(forces, "id", "left").select(
             "id", "x", "y", "pvx", "pvy",
             (F.col("vx") + F.coalesce(F.col("fx"), F.lit(0.0))).alias("nvx"),

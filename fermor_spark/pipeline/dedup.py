@@ -10,18 +10,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from fermor_spark.iterate import (
-    _driver_scale, _fixpoint, _min_label_components, _persist, _record, round_rows)
+from fermor_spark.iterate import _pair_components
 from fermor_spark.session import managed_cache
-
-
-def __getattr__(name: str):
-    # PEP 562: min-propagation rounds of the calling context's most recent
-    # dedup_clusters call (iterate's round record); 0 = the driver
-    # union-find finish ran instead
-    if name == "LAST_CLUSTER_ROUNDS":
-        return len(round_rows("cluster"))
-    raise AttributeError(f"module {__name__!r} has no attribute {name!r}")
 
 
 def exact_dedup(df: DataFrame, key_cols: list[str], order_cols: list[str]) -> DataFrame:
@@ -583,64 +573,21 @@ def incremental_embedding_dedup(new_df: DataFrame, corpus_df: DataFrame,
 
 
 def dedup_clusters(pairs: DataFrame, all_ids: DataFrame,
-                   local_pair_threshold: int = 200_000) -> DataFrame:
-    """Resolve near-dup pairs into clusters → (id, cluster) where cluster is
-    the min id of the connected component (min-id label propagation — the
-    same fixpoint as iterate.connected_components, inlined here for plain
-    id-pair input).
+                   local_edge_threshold: int = 200_000) -> DataFrame:
+    """Resolve near-dup pairs (id_a, id_b) into clusters → (id, cluster)
+    over the ids of ``all_ids``' first column, cluster = the min id of the
+    pair graph's connected component. Ids keep their type.
 
-    Distributed/local hybrid (iterate.connected_components discipline):
-    near-dup candidate pair sets are tiny relative to the corpus (LSH
-    keeps them so by construction), so under ``local_pair_threshold`` the
-    closure is the driver union-find CC uses, whose (id, cluster) map
-    broadcasts back against all_ids — replacing up-to-50 min-propagation
-    rounds with one broadcast join. Pass 0 to force the distributed path,
-    whose rounds run on iterate's round driver (record ``cluster``)."""
-    rec = _record("cluster")
-    base = all_ids.select(F.col(all_ids.columns[0]).alias("id"))
-    # Probe and fetch in ONE evaluation: pairs is typically the expensive
-    # LSH-verify join, so a count() gate followed by toPandas() would run
-    # the whole upstream pipeline twice.
-    ppdf = _driver_scale(pairs.select("id_a", "id_b"), local_pair_threshold)
-    if ppdf is not None:
-        import pandas as pd
-
-        comp = _min_label_components(ppdf["id_a"].tolist(), ppdf["id_b"].tolist())
-        if not comp:
-            return base.withColumn("cluster", F.col("id"))
-        id_t = pairs.schema["id_a"].dataType.simpleString()
-        m = pd.DataFrame({"id": list(comp), "_c": list(comp.values())})
-        mdf = base.sparkSession.createDataFrame(m, f"id {id_t}, _c {id_t}")
-        return (
-            base.join(F.broadcast(mdf), "id", "left")
-            .select("id", F.coalesce(F.col("_c"), F.col("id")).alias("cluster"))
-        )
-    # materialized once: every round joins it, and a lazy pair set would
-    # re-run the upstream LSH pipeline inside each round
-    adj = _persist(
-        pairs.select(F.col("id_a").alias("u"), F.col("id_b").alias("v"))
-        .unionByName(pairs.select(F.col("id_b").alias("u"), F.col("id_a").alias("v")))
-    )
-
-    def lower(comp: DataFrame, _: int) -> DataFrame:
-        neigh = (
-            comp.join(adj, comp["id"] == adj["u"], "inner")
-            .groupBy(F.col("v").alias("id"))
-            .agg(F.min("cluster").alias("nc"))
-        )
-        return comp.select("id", "cluster").join(neigh, "id", "left").select(
-            "id", F.least(F.col("cluster"), F.coalesce(F.col("nc"), F.col("cluster"))).alias("cluster"),
-            (F.col("nc") < F.col("cluster")).alias("_lowered"),
-        )
-
-    # the round's fixed-point probe is the count of lowered labels, fused
-    # into the job that materializes the round (labels only ever fall)
-    lowered = (F.count(F.when(F.col("_lowered"), True)),)
-    comp = base.withColumn("cluster", F.col("id"))
-    for comp, (n,) in _fixpoint(rec, comp, lower, 50, probe=lowered):
-        if n == 0:
-            break
-    return comp.select("id", "cluster")
+    The closure is iterate's CC engine, the one ``connected_components``
+    runs: at most ``local_edge_threshold`` distinct pairs (LSH keeps
+    candidate sets small by construction) finish in the driver
+    union-find, and larger sets run O(log n) star-contraction rounds
+    (record ``cc``). Pass 0 to force the rounds."""
+    return _pair_components(
+        pairs.select(F.col("id_a").alias("u"), F.col("id_b").alias("v")),
+        all_ids.select(F.col(all_ids.columns[0]).alias("id")),
+        max_iter=50, local_edge_threshold=local_edge_threshold,
+    ).withColumnRenamed("comp", "cluster")
 
 
 def duplicated_spans(

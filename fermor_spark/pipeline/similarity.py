@@ -501,10 +501,11 @@ def semantic_dedup(
     per-cluster work is the same packed-block BLAS matmul as
     cosine_pairs_exact (id-hash sub-blocks bound row size; one numpy
     matmul per in-cluster block pair inside mapInPandas; nothing on the
-    driver). Component resolution reuses dedup_clusters (driver union-find
-    under its pair threshold, min-propagation rounds above it). The
-    centroid assignment runs once per call: it is lazily checkpointed, so
-    the block grid and the final join read one materialization.
+    driver). Component resolution is dedup_clusters, iterate's CC engine
+    (driver union-find under its edge threshold, star-contraction rounds
+    above it), which reads the pair grid once. The centroid assignment
+    runs once per call: it is lazily checkpointed, so the block grid and
+    the final join read one materialization.
     """
     import math
 

@@ -922,7 +922,7 @@ def bpe_train(df: DataFrame, id_col: str, text_col: str,
     if min_count > 1:
         wq = wq.where(F.col("c") >= min_count)
     # limit(max_words+1) short-circuits the probe and the fetch into one
-    # evaluation (the dedup_clusters hybrid-gate pattern)
+    # evaluation (iterate._driver_scale's pattern)
     words = wq.limit(max_words + 1).collect()
     if len(words) > max_words:
         raise ValueError(

@@ -6269,17 +6269,17 @@ def g_reachable_distributed(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @_dist_query("dedup_clusters_distributed", "dedup_clusters_minhash")
 def dedup_clusters_distributed(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """dedup_clusters_minhash with local_pair_threshold=0: min-label
-    propagation over the candidate-pair adjacency runs distributed."""
+    """dedup_clusters_minhash with local_edge_threshold=0: the star
+    contraction rounds over the candidate pairs run distributed."""
     from fermor_spark.pipeline import dedup as _dedup
 
     pairs = QUERIES["dedup_minhash_lsh"](spark, sf_dir).select(
         F.col("doc_a").alias("id_a"), F.col("doc_b").alias("id_b")
     )
     d = table(spark, sf_dir, "documents").select("doc_id")
-    out = _dedup.dedup_clusters(pairs, d, local_pair_threshold=0).select(
+    out = _dedup.dedup_clusters(pairs, d, local_edge_threshold=0).select(
         F.col("id").alias("doc_id"), "cluster")
-    assert _dedup.LAST_CLUSTER_ROUNDS > 0, "distributed cluster leg did not run"
+    assert iterate.LAST_CC_ROUNDS > 0, "distributed cluster leg did not run"
     return out
 
 
@@ -6317,43 +6317,19 @@ def dedup_clusters_distributed(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Rows whose EXECUTED implementation changed this round (error-path-only
 # changes stay off per the r10 convention). Rotates each round.
 _CHANGED_THIS_ROUND = [
-    # vertices(kind) goes through Route.of_kind, whose (id, kind) V-slice
-    # join carries no hint: the planner's broadcast threshold decides
-    # (r17 guarded a hint there with a per-graph limit probe).
-    # Every registered gate rooting at a kind scan executes that join
-    # (three more — g_out_nation, g_take_drop_parts,
-    # g_lookahead_big_buyers — retired to _RETIRED_R17 below, which is
-    # what makes this cohort fit the tier-A arithmetic):
-    "g_2hop_region",
-    "g_branch_merge",
-    "g_filter_one_of",
-    "g_lookahead_range",
-    "g_neg_lookahead_nations",
-    "g_order_count_distribution",
-    "g_other_v_both",
-    "g_recommender",
-    "g_set_documents_nation",
-    "g_sorted_section_orders",
-    "g_subseq_degree",
-    # r17: siblings() builds from its hop result so the one-hop auto
-    # hint cannot leak past it (ADVICE r16 medium); the gate executing
-    # siblings() also roots at a kind scan:
-    "g_siblings_same_nation",
-    # k_core's delta leg joins its frontier with no hint (r17 guarded
-    # the broadcast with the loop's own per-round count):
-    "g_kcore_ring_chains",
-    "g_kcore_distributed",
-    # r17: square_count's final fold is integer DIV 4 (exact above 2^53;
-    # ADVICE r16 low):
-    "g_square_count_bipartite",
-    # r17: the dir-table gate removes its temp directory after the drain
-    # and sweeps hour-old orphans (ADVICE r16 low — the applicationId
-    # keying accumulated one dir per run):
-    "events_streaming_dir_table",
-    # the bloom gate's truth leg (distinct ordering customers, a frame
-    # that scales with SF) joins with no hint (r17 guarded it by the
-    # order count):
-    "sketch_bloom_membership",
+    # connected_components and dedup_clusters run on one CC engine,
+    # iterate._pair_components (star contraction; the local leg's frame
+    # is a LocalRelation; the round cap raises). CC's distributed plan
+    # is unchanged; dedup_clusters loses its min-label propagation rounds
+    # and its broadcast-hinted union-find map:
+    "g_connected_components",
+    "g_cc_distributed",
+    "dedup_clusters_minhash",
+    "dedup_clusters_distributed",
+    "pipeline_curate_e2e",
+    # semantic_dedup resolves its pairs through dedup_clusters:
+    "semantic_dedup_keep",
+    "pipeline_crawl_e2e",
 ]
 
 

@@ -115,6 +115,26 @@ def test_connected_components_chain_logarithmic_rounds(spark):
     hybrid = {(r["id"], r["comp"])
               for r in iterate.connected_components(g).collect()}
     assert hybrid == {(r["id"], r["comp"]) for r in rows}
+    # near-dup clusters run on the same engine: the chain as long-id
+    # pairs, one orientation each, is one cluster under the same bound
+    from fermor_spark.pipeline import dedup
+
+    pairs = spark.range(n - 1).select(F.col("id").alias("id_a"),
+                                      (F.col("id") + 1).alias("id_b"))
+    clusters = dedup.dedup_clusters(pairs, spark.range(n),
+                                    local_edge_threshold=0).collect()
+    assert {r["cluster"] for r in clusters} == {0} and len(clusters) == n
+    assert 0 < iterate.LAST_CC_ROUNDS <= 12, iterate.LAST_CC_ROUNDS
+
+
+def test_connected_components_round_cap_raises(spark):
+    """Rounds that end before the fixed point raise, naming max_iter,
+    instead of labelling from a half-contracted edge set."""
+    ids = [f"v{i:03d}" for i in range(61)]
+    g = edges_graph(spark, "l", list(zip(ids, ids[1:])))
+    with pytest.raises(RuntimeError, match="max_iter=2"):
+        iterate.connected_components(g, local_edge_threshold=0, max_iter=2)
+    assert iterate.LAST_CC_ROUNDS == 2
 
 
 def test_round_telemetry_per_thread(spark):

@@ -292,6 +292,18 @@ def test_dedup_clusters(planted):
     assert m["6"] == "6"
 
 
+def test_dedup_clusters_links_through_ids_outside_universe(spark):
+    """A pair id missing from all_ids is not emitted but still links its
+    neighbours, on the driver finish and on the distributed rounds alike:
+    (0, 5), (5, 1) over {0, 1} is one cluster labelled 0."""
+    pairs = spark.createDataFrame([(0, 5), (5, 1)], "id_a long, id_b long")
+    ids = spark.createDataFrame([(0,), (1,)], "id long")
+    for threshold in (200_000, 0):
+        got = dedup.dedup_clusters(pairs, ids, local_edge_threshold=threshold)
+        assert got.schema.simpleString() == "struct<id:bigint,cluster:bigint>"
+        assert sorted(map(tuple, got.collect())) == [(0, 0), (1, 0)], threshold
+
+
 def test_embedding_near_dup(spark):
     rows = [
         (1, [1.0, 0.0, 0.0, 0.0]),
@@ -1803,7 +1815,9 @@ def test_semantic_dedup_assigns_once(spark):
     """One semantic_dedup call runs the centroid assignment once: exactly
     one SQL execution's plan holds semantic_assign's MapInPandas (the
     lazy checkpoint's), and every later job reads the checkpoint instead
-    of re-running the matmul's Python tasks."""
+    of re-running the matmul's Python tasks. The pair grid's MapInPandas
+    also runs in one execution: the cluster resolution reads the pairs
+    once."""
     from fermor_spark.pipeline.similarity import semantic_dedup
     from tests.fixtures import executed_plan_nodes
 
@@ -1815,11 +1829,14 @@ def test_semantic_dedup_assigns_once(spark):
         spark, lambda: out.extend(
             semantic_dedup(df, threshold=0.99, k=3).collect()))
     assert len(out) == 40 and 0 < sum(r["kept"] for r in out) < 40
-    assigning = [eid for eid, nodes in plans.items()
-                 if any(name.startswith("MapInPandas")
-                        and desc.split()[1].startswith("assign(")
-                        for name, desc in nodes)]
-    assert len(assigning) == 1, plans
+    def running(fn):
+        return [eid for eid, nodes in plans.items()
+                if any(name.startswith("MapInPandas")
+                       and desc.split()[1].startswith(fn)
+                       for name, desc in nodes)]
+
+    assert len(running("assign(")) == 1, plans
+    assert len(running("fn(")) == 1, plans
 
 
 def test_classifier_score_decision_and_normalization(spark):

@@ -993,7 +993,7 @@ _pair_lists = st.lists(
 def test_dedup_clusters_matches_union_find(spark, ps, force_distributed):
     """dedup_clusters == min-id connected components over the pair graph,
     identical on the driver union-find finish AND the forced distributed
-    min-propagation leg."""
+    star-contraction leg."""
     from fermor_spark.pipeline.dedup import dedup_clusters
 
     all_ids = spark.createDataFrame([(i,) for i in range(10)], "id long")
@@ -1003,7 +1003,7 @@ def test_dedup_clusters_matches_union_find(spark, ps, force_distributed):
     got = {r["id"]: r["cluster"]
            for r in dedup_clusters(
                pairs, all_ids,
-               local_pair_threshold=0 if force_distributed else 200_000
+               local_edge_threshold=0 if force_distributed else 200_000
            ).collect()}
 
     parent = list(range(10))

@@ -104,6 +104,21 @@ def test_force_atlas_runs_and_contracts(spark):
     assert spread(pos) < spread(pos0) * 1.5
 
 
+def test_force_atlas_rejects_unknown_keywords(spark):
+    """The force constants are named parameters: a misspelled constant or
+    a fixed ``speed`` raises instead of being ignored."""
+    g = edges_graph(spark, "l", [("a", "b"), ("b", "c")])
+    with pytest.raises(TypeError, match="gravty"):
+        layout.force_atlas(g, iterations=2, gravty=9.0)
+    with pytest.raises(TypeError, match="speed"):
+        layout.force_atlas(g, iterations=2, speed=5.0)
+    base = {r["id"]: (r["x"], r["y"])
+            for r in layout.force_atlas(g, iterations=2).collect()}
+    heavy = {r["id"]: (r["x"], r["y"])
+             for r in layout.force_atlas(g, iterations=2, gravity=9.0).collect()}
+    assert base.keys() == heavy.keys() and base != heavy
+
+
 def test_to_networkx(spark):
     pytest.importorskip("networkx")
     g = job_graph(spark)

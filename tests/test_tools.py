@@ -328,7 +328,6 @@ def test_broadcast_sites_match_adjudicated_allowlist():
     allow = {
         ("fermor_spark/iterate.py", "power_step"): 1,        # 1-row dangling mass
         ("fermor_spark/pipeline/dedup.py", "contamination_pairs"): 2,  # bench set by contract
-        ("fermor_spark/pipeline/dedup.py", "dedup_clusters"): 1,  # driver-built UF map
         ("fermor_spark/pipeline/similarity.py", "brute_force_topk"): 1,  # query side by contract
         ("fermor_spark/pipeline/text.py", "bigram_logprob"): 1,   # 1-row stats
         ("fermor_spark/pipeline/text.py", "tfidf_top_terms"): 1,  # 1-row N

@@ -19,7 +19,6 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from fermor_spark import datasets, iterate
-from fermor_spark.pipeline import dedup
 from fermor_spark.session import get_spark
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -50,7 +49,7 @@ def main() -> None:
              "bfs": ("g_reachable_distributed",
                      lambda: iterate.LAST_BFS_ROUNDS),
              "dedup": ("dedup_clusters_distributed",
-                       lambda: dedup.LAST_CLUSTER_ROUNDS)}
+                       lambda: iterate.LAST_CC_ROUNDS)}
     gate, rounds_fn = GATES[which]
 
     def run():
